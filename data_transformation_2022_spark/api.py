@@ -44,11 +44,18 @@ def _json_default(o):
     """JSON fallback for engine values: all-integral horizontal folds
     carry DECIMAL(38,0) (the chosen overflow policy, operators/steps.py)
     — serialize integral decimals as ints (lossless at any magnitude
-    JSON can hold), non-integral as floats; numpy scalars via .item()."""
+    JSON can hold), non-integral as floats; dates and timestamps
+    (``datetime``/``date``/pandas ``Timestamp``) as ISO strings, ``NaT``
+    as null; numpy scalars via .item()."""
+    import datetime
     import decimal
 
     if isinstance(o, decimal.Decimal):
         return int(o) if o == o.to_integral_value() else float(o)
+    if o is pd.NaT:
+        return None
+    if isinstance(o, datetime.date):  # datetime and Timestamp included
+        return o.isoformat()
     if hasattr(o, "item"):
         return o.item()
     raise TypeError(f"Object of type {type(o).__name__} is not JSON serializable")

@@ -5,12 +5,16 @@ The Spark re-architecture of the reference's ``searchobj`` lifecycle
 (search.py EP2, SURVEY §3):
 
   * the *search* runs on metadata (plans.search, no data touched);
-  * each unique transformation path executes ONCE on Spark and is
-    memoized (reference resdatabuffer, search.py:293-298) — scatter/line
-    channel data on a bounded sample (the reference caps all data at 400
-    rows; we cap only what feeds ML/scoring), bar aggregations on the
-    FULL table distributed (groupBy over a nominal key is output-bounded
-    by the domain, so it scales);
+  * each unique transformation path executes ONCE and is memoized
+    (reference resdatabuffer, search.py:293-298);
+  * scatter/line channel frames come from a bounded sample (the
+    reference caps all data at 400 rows; we cap only what feeds
+    ML/scoring), collected once and evaluated in driver pandas/numpy by
+    operators/steps_local and ml/coret_local; a frame those evaluators
+    cannot prove equivalent to the Spark path takes one per-frame Spark
+    job over the cached sample instead;
+  * bar aggregations run on the FULL table, distributed (groupBy over a
+    nominal key is output-bounded by the domain, so it scales);
   * chart assembly joins channel frames positionally on ``__rid``
     (reference pd.concat(axis=1));
   * scoring runs per chart on the small assembled frames (parallel
@@ -29,8 +33,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .ml import coret_local
 from .ml.coret import CORE_T_RUNNERS
-from .operators.steps import RID, Step, apply_step, apply_tpath, small_input_mode
+from .operators.steps import (  # noqa: F401  (apply_step: traced by perfbench)
+    RID,
+    Step,
+    apply_step,
+    apply_tpath,
+    small_input_mode,
+)
 from .operators.steps_local import eval_steps_local
 from .plans.catalog import CORE_T, VLIST
 from .plans.search import Candidate, enumerate_tpaths
@@ -59,10 +70,10 @@ MAX_PER_TYPE = {
 MAX_SERIES = 3  # lines/bars per chart (reference config.py:33-34)
 NOT_CALCU_DMT = True  # skip DM core-Ts on arithmetic paths (config.py:19)
 
-# toPandas dtype for each Spark type — outer joins / grouping-set
-# Expand unions promote ints to float64 whenever nulls appear in a
-# column, and pandas infer_objects cannot demote non-object dtypes
-# back; consumers restore the declared type when the slice is null-free
+# toPandas dtype for each Spark type — grouping-set Expand unions
+# promote ints to float64 whenever nulls appear in a column, and pandas
+# infer_objects cannot demote non-object dtypes back; the bar pool
+# restores the declared type when the slice is null-free
 _PD_BY_SPARK = {
     "tinyint": "int8", "smallint": "int16", "int": "int32",
     "bigint": "int64", "float": "float32", "double": "float64",
@@ -181,189 +192,74 @@ class Executor:
         # inherited transitively by children built over them) — the
         # dynamic-selector guard in _derived_base keys off this
         self._pruned_base_keys: set[tuple] = set()
-        # sample-side step-prefix memo: many candidates share a leading
-        # rank/nominalize step (e.g. "rank all 100 columns" → select
-        # subset), and re-attaching that subtree to every candidate's
-        # plan pays its Catalyst analysis + codegen again per candidate ×
-        # core-T. Expensive prefixes are localCheckpoint'ed (the sample
-        # is ≤sample_cap rows — materialization is trivial, the saved
-        # re-planning is not), so downstream plans start from a leaf.
-        self._sample_bases: dict[tuple, DataFrame] = {}
-        # collected-once copy of the bounded sample for the driver-side
-        # step evaluator (steps_local): step-only channel frames are
-        # rank/select/arithmetic over ≤sample_cap rows, and serving them
-        # from pandas skips a Catalyst plan + job round-trip per chain
-        # (r13 opt #3; equivalence contract in operators/steps_local.py,
-        # pinned by tests/test_steps_local.py). SPARK_GRAFT_NO_LOCAL_STEPS
-        # disables it for A/B measurement.
-        import os
-        import threading
-
+        # collected-once copy of the bounded sample: every channel frame
+        # is built from it on the driver (operators/steps_local for the
+        # step chain, ml/coret_local for the core-T on top). Spark on
+        # ≤sample_cap rows is almost all planning and scheduling cost, so
+        # Spark only builds what those evaluators cannot prove (see
+        # channel_frame).
         self._sample_pdf: pd.DataFrame | None = None
         self._sample_types: list[tuple[str, str]] | None = None
-        self._local_steps = not os.environ.get("SPARK_GRAFT_NO_LOCAL_STEPS")
-        # core-T twin (r14): SPARK_GRAFT_NO_LOCAL_CORET disables just the
-        # coret_local evaluator (for marginal A/Bs); NO_LOCAL_STEPS
-        # disables both (the coret twin consumes the step twin's frames)
-        self._local_coret = self._local_steps and not os.environ.get(
-            "SPARK_GRAFT_NO_LOCAL_CORET"
-        )
-        self._sample_lock = threading.Lock()
 
     def _sample_local(self) -> tuple[pd.DataFrame, list[tuple[str, str]]]:
-        """The sample collected once (RID order) + its Spark types."""
+        """The sample collected once (RID order) + its Spark types.
+
+        Unlocked: prefetch builds its first frame, which calls this,
+        before starting its pool threads, so a race needs concurrent
+        first calls from outside, and those would only collect the same
+        rows twice."""
         if self._sample_pdf is None:
-            with self._sample_lock:
-                if self._sample_pdf is None:
-                    pdf = self.sample.toPandas()
-                    # defensive: the engine's row-order contract is RID
-                    # ascending (the solo path collects orderBy(RID))
-                    pdf = pdf.sort_values(RID, kind="mergesort").reset_index(
-                        drop=True
-                    )
-                    self._sample_types = self.sample.dtypes
-                    self._sample_pdf = pdf
+            pdf = self.sample.toPandas()
+            # defensive: the engine's row-order contract is RID ascending
+            pdf = pdf.sort_values(RID, kind="mergesort").reset_index(drop=True)
+            self._sample_types = self.sample.dtypes
+            self._sample_pdf = pdf
         return self._sample_pdf, self._sample_types
-
-    def _local_channel_frame(self, cand: Candidate) -> pd.DataFrame | None:
-        """Step-only channel frame served by the driver-side evaluator;
-        None whenever equivalence with the Spark path is not proven
-        (caller falls through to the Spark path)."""
-        if not self._local_steps:
-            return None
-        try:
-            pdf, types = self._sample_local()
-            res = eval_steps_local(pdf, types, cand.steps)
-            if res is None:
-                return None
-            dpdf, _ = res
-            if any(c not in dpdf.columns for c in cand.out_cols):
-                return None
-            return dpdf[[RID, *cand.out_cols]].reset_index(drop=True)
-        except Exception:
-            return None
-
-    def _local_coret_frame(
-        self, cand: Candidate, coret: str
-    ) -> pd.DataFrame | None:
-        """Core-T channel frame served by the driver-side evaluator
-        (ml/coret_local): the step chain is evaluated by the proven
-        steps_local contract, then the runner math — driver numpy in
-        both paths — runs directly on the pandas prefix. None whenever
-        equivalence with the Spark path is not proven (caller falls
-        through to the Spark runner). Row-order note: pca/kmeans emit in
-        the derived frame's own order, so coret_local only serves them
-        for chains with no rank/nominalize step (where that order is
-        provably RID — the same invariant _batch_step_frames relies on);
-        the sample-bound transforms (mds/tsne/umap/dbscan) re-sort by
-        RID internally and serve for any provable chain."""
-        if not self._local_coret:
-            return None
-        try:
-            from .ml.coret_local import eval_coret_local
-
-            pdf, types = self._sample_local()
-            res = eval_steps_local(pdf, types, cand.steps)
-            if res is None:
-                return None
-            dpdf, dtypes = res
-            rid_order = not any(
-                s.t in ("rank", "nominalize") for s in cand.steps
-            )
-            return eval_coret_local(dpdf, dtypes, coret, rid_order=rid_order)
-        except Exception:
-            return None
-
-    def _sample_derived(self, steps) -> DataFrame:
-        """apply_tpath over the cached sample with shared-prefix memo +
-        lineage truncation after rank/nominalize steps. The build is
-        serialized per prefix (double-checked lock): the prefetch pool
-        hits the same leading step from 8 threads at once, and letting
-        each one eagerly checkpoint its own copy of the expensive prefix
-        multiplies the exact cost the memo exists to avoid."""
-        df = self.sample
-        key: tuple = ()
-        for s in steps:
-            # args are keyed by (type, repr): distinct values with equal
-            # str() — 1 vs '1', True vs 'True' — must not share a memo slot
-            key = key + (
-                (
-                    s.t,
-                    s.i_type,
-                    tuple(s.i),
-                    s.o_type,
-                    tuple(s.index),
-                    tuple((type(a).__name__, str(a)) for a in s.args),
-                ),
-            )
-            hit = self._sample_bases.get(key)
-            if hit is not None:
-                df = hit
-                continue
-            with self._sample_lock:
-                hit = self._sample_bases.get(key)
-                if hit is not None:
-                    df = hit
-                    continue
-                with small_input_mode():
-                    df = apply_step(df, s)
-                if s.t in ("rank", "nominalize"):
-                    df = df.localCheckpoint(eager=True)
-                self._sample_bases[key] = df
-        return df
 
     def channel_frame(self, cand: Candidate, coret: str | None) -> pd.DataFrame | None:
         """Execute (tpath, core-T) once on the bounded sample; return the
-        collected channel frame keyed by __rid."""
+        collected channel frame keyed by __rid, in RID order.
+
+        The driver evaluators build every frame whose equivalence with
+        the Spark path they can prove from the tracked schema; whatever
+        they refuse (nulls/NaN, decimals, float32 mixed with ints,
+        ``astype``, ANSI overflow, lda, lida) runs once on Spark over the
+        cached sample."""
         key = (cand.signature(), coret)
         if key in self._frames:
             return self._frames[key]
-        out: pd.DataFrame | None
-        try:
-            with small_input_mode():  # channel frames are sample-bounded
-                if coret is None:
-                    # driver-side evaluator first (r13 opt #3): step-only
-                    # frames are provably-equivalent pandas over the
-                    # collected sample; None → the Spark path below
-                    out = self._local_channel_frame(cand)
-                    if out is None:
-                        derived = self._sample_derived(cand.steps)
-                        # explicit RID order: tpaths ending in
-                        # rank/nominalize come back in window-sort (or
-                        # stacked-groupBy hash) order, and the batch path
-                        # sorts by RID — all memo fillers must yield the
-                        # same row order
-                        out = (
+        out: Any = None
+        # no DM core-T on arithmetic paths (reference Tengine.py:58-64)
+        skip = coret is not None and NOT_CALCU_DMT and any(
+            s.t in ("sum", "sub", "mul", "div") for s in cand.steps
+        )
+        if not skip:
+            try:
+                pdf, types = self._sample_local()
+                res = eval_steps_local(pdf, types, cand.steps)
+                if res is not None:
+                    dpdf, dtypes = res
+                    if coret is not None:
+                        out = coret_local.eval_coret_local(dpdf, dtypes, coret)
+                    elif all(c in dpdf.columns for c in cand.out_cols):
+                        out = dpdf[[RID, *cand.out_cols]].reset_index(drop=True)
+            except Exception:
+                out = None  # unproven: Spark decides below
+            if out is coret_local.PROVEN_NONE:
+                out = None
+            elif out is None:
+                try:
+                    with small_input_mode():  # channel frames are sample-bounded
+                        derived = apply_tpath(self.sample, cand.steps)
+                        sdf = (
                             derived.select(RID, *cand.out_cols)
-                            .orderBy(RID)
-                            .toPandas()
+                            if coret is None
+                            else CORE_T_RUNNERS[coret](derived)
                         )
-                else:
-                    if NOT_CALCU_DMT and any(
-                        s.t in ("sum", "sub", "mul", "div") for s in cand.steps
-                    ):
-                        out = None  # reference Tengine.py:58-64
-                    else:
-                        # driver-side core-T evaluator first (r14 opt,
-                        # VERDICT r13 #1): the runner math is driver
-                        # numpy either way — serve it from the proven
-                        # pandas sample prefix and skip the 2-3 bounded
-                        # Spark jobs per frame. PROVEN_NONE = the
-                        # runner's numeric-column guard provably fails
-                        # (the only sample-side Spark job left in the
-                        # bench shape built a rank prefix solely to
-                        # produce that None); None → the Spark path
-                        from .ml.coret_local import PROVEN_NONE
-
-                        out = self._local_coret_frame(cand, coret)
-                        if out is PROVEN_NONE:
-                            out = None
-                        elif out is None:
-                            derived = self._sample_derived(cand.steps)
-                            res = CORE_T_RUNNERS[coret](derived)
-                            out = res.toPandas() if res is not None else None
-        except Exception:
-            out = None
+                        if sdf is not None:
+                            out = sdf.orderBy(RID).toPandas()
+                except Exception:
+                    out = None
         self._frames[key] = out
         return out
 
@@ -409,8 +305,13 @@ class Executor:
     ) -> None:
         """Concurrent job submission (replaces the reference's optional
         MULTIPROCESS search parallelism, config.py:15 / search.py:55-63):
-        fill the memo tables with a thread pool — Spark schedules the
-        resulting jobs concurrently on idle executor slots.
+        fill the memo tables with thread pools.
+
+        Channel frames are sample-side: the sample is collected once and
+        each frame is driver pandas/numpy from the evaluators
+        (``channel_frame``); only a frame they refuse becomes a Spark job,
+        one per frame. Bar aggregates are table-side Spark jobs, which
+        Spark schedules concurrently on idle executor slots.
 
         Bar aggregates are BATCHED per derived base: every bar job
         sharing the same base — ALL its x columns and every
@@ -422,19 +323,7 @@ class Executor:
         contents (r12; r8-r11 batched per (base, x) — still ~#bases×#x
         scheduler round-trips, the dominant term of the bar pool's
         4.5 s at sf0.1)."""
-        import os
-        import time as _time
         from concurrent.futures import ThreadPoolExecutor
-
-        _trace = bool(os.environ.get("SPARK_GRAFT_ENGINE_TRACE"))
-        _t0 = _time.time()
-
-        def _tr(msg: str) -> None:
-            if _trace:
-                import sys as _sys
-
-                print(f"ENGINE_TRACE {msg}: {_time.time() - _t0:.2f}s",
-                      file=_sys.stderr)
 
         uniq_frames: dict[tuple, tuple[Candidate, str | None]] = {}
         for cand, coret in frame_jobs:
@@ -547,8 +436,8 @@ class Executor:
                         # the Expand union nulls every other set's x
                         # column, which promotes pandas ints to float64
                         # for the WHOLE column — restore this slice's x
-                        # dtype (same convention as _batch_step_frames;
-                        # genuine null groups keep the promoted dtype)
+                        # dtype (genuine null groups keep the promoted
+                        # dtype)
                         want = _PD_BY_SPARK.get(
                             base.schema[x].dataType.simpleString()
                         )
@@ -576,13 +465,11 @@ class Executor:
         # Two independent sides run CONCURRENTLY (r8: the table side's
         # first base materialization — a full-table rank chain, the
         # single most expensive block of recommend — previously
-        # serialized BEHIND the sample-side batch join it shares nothing
-        # with):
+        # serialized BEHIND the sample side it shares nothing with):
         #
-        # * sample side: the step-only frames batch join (one outer-join
-        #   job over the ≤sample_cap cached sample), then the per-frame
-        #   pool (memo hits for everything the batch served, per-frame
-        #   jobs for core-T frames);
+        # * sample side: the per-frame pool over the collected sample
+        #   (driver pandas, with one Spark job per frame the evaluators
+        #   refuse);
         # * table side: serial derived-base registration (plan-only,
         #   bottom-up through the recursive prefix memo so ('rank','sub')
         #   reuses the cached ('rank',) table and racing threads never
@@ -592,36 +479,15 @@ class Executor:
         #   pool against the materialized bases.
         #
         # Both sides fill disjoint memo tables (_frames vs _bar_frames /
-        # _derived_bases), so the only shared state is the sample-prefix
-        # memo, which _sample_derived already guards with a lock.
+        # _derived_bases) and share no state.
         def _sample_side() -> None:
-            # step-only frames (no core-T) are all row-aligned
-            # projections of the same cached sample: collect them in ONE
-            # outer-join job instead of one toPandas job each; anything
-            # the batch can't serve falls through to the per-frame pool
-            null_frames = {
-                k: v
-                for k, v in uniq_frames.items()
-                if v[1] is None and k not in self._frames
-            }
-            # driver-side evaluator first (r13 opt #3): whatever it can
-            # prove equivalent never touches Spark at all; only the
-            # leftovers go through the batched outer-join job
-            for k in list(null_frames):
-                out = self._local_channel_frame(null_frames[k][0])
-                if out is not None:
-                    self._frames[k] = out
-                    del null_frames[k]
-            if len(null_frames) > 1:
-                self._batch_step_frames(null_frames)
-            _tr("batch_step_frames done")
+            jobs = list(uniq_frames.values())
+            if jobs:
+                # the first frame collects the sample, before the pool
+                # threads need it
+                self.channel_frame(*jobs[0])
             with ThreadPoolExecutor(workers) as fpool:
-                list(
-                    fpool.map(
-                        lambda cv: self.channel_frame(*cv), uniq_frames.values()
-                    )
-                )
-            _tr(f"frame pool done ({len(uniq_frames)} frames)")
+                list(fpool.map(lambda cv: self.channel_frame(*cv), jobs[1:]))
 
         def _table_side() -> None:
             # Column hint for the persisted bases: the bar aggregates
@@ -668,7 +534,6 @@ class Executor:
 
             for chain in chains.values():
                 self._derived_base(chain, keep_fn=keep_fn)
-            _tr(f"table side: {len(chains)} chains registered")
             by_level: dict[int, list[DataFrame]] = {}
             for key, base in self._derived_bases.items():
                 if key not in self._persisted_base_keys:
@@ -714,7 +579,6 @@ class Executor:
                     group = by_level[level]
                     with ThreadPoolExecutor(min(8, len(group))) as mpool:
                         list(mpool.map(lambda b: b.count(), group))
-                    _tr(f"level {level}: {len(group)} bases materialized")
                     futs += [
                         bpool.submit(_batched_bars, e)
                         for e in sched.pop(level, [])
@@ -723,13 +587,10 @@ class Executor:
                     futs += [bpool.submit(_batched_bars, e) for e in sched[lvl]]
                 for f in futs:
                     f.result()
-            _tr(f"bar pool done ({len(merged)} base jobs / "
-                f"{len(uniq_bars)} bar entries)")
 
         with ThreadPoolExecutor(2) as sides:
             for f in [sides.submit(_sample_side), sides.submit(_table_side)]:
                 f.result()
-        _tr("prefetch done")
 
     def release(self) -> None:
         """Unpersist everything this executor cached (sample + derived
@@ -755,16 +616,6 @@ class Executor:
         self._derived_bases.clear()
         self._persisted_base_keys.clear()
         self._pruned_base_keys.clear()
-        # _sample_bases (localCheckpoint blocks, ≤sample_cap rows each)
-        # are NOT explicitly unpersisted: each ``.rdd`` access re-runs
-        # physical planning — 37 frames × ~25 ms of py4j round trips
-        # measured ~0.8 s of the ~1.1 s drop, which the NEXT Executor's
-        # release-join then waits out (r13 opt). Clearing the memo drops
-        # the only references; ContextCleaner (reference tracking, on by
-        # default) reclaims the blocks after GC. Unlike the
-        # CacheManager entries below, RDD blocks have no analyzed-plan
-        # identity, so delayed cleanup cannot evict a successor's cache.
-        self._sample_bases.clear()
 
         def _drop() -> None:
             try:
@@ -780,112 +631,6 @@ class Executor:
         th = threading.Thread(target=_drop, daemon=True, name="executor-release")
         _PENDING_RELEASES.append(th)
         th.start()
-
-    def _batch_step_frames(
-        self, jobs: dict[tuple, tuple[Candidate, str | None]]
-    ) -> None:
-        """Fill the frame memo for step-only candidates with ONE Spark
-        job: every frame is RID-keyed over the same ≤sample_cap cached
-        sample, so an outer join on RID (plus a per-frame presence
-        marker, in case a path ever drops rows) reconstructs each frame
-        exactly. Build-time failures skip that candidate; an
-        execution-time failure abandons the whole batch — either way the
-        per-frame path re-runs whatever is still missing."""
-        import functools
-        import os
-        import time as _time
-
-        _trace = bool(os.environ.get("SPARK_GRAFT_ENGINE_TRACE"))
-        _t0 = _time.time()
-
-        def _tr(msg: str) -> None:
-            if _trace:
-                import sys as _sys
-
-                print(
-                    f"ENGINE_TRACE bsf {msg}: {_time.time() - _t0:.2f}s",
-                    file=_sys.stderr,
-                )
-
-        pieces, meta = [], []
-        for i, (key, (cand, _)) in enumerate(jobs.items()):
-            try:
-                with small_input_mode():
-                    d = self._sample_derived(cand.steps)
-                sel = d.select(
-                    F.col(RID),
-                    F.lit(1).alias(f"f{i}__p"),
-                    *[
-                        F.col(c).alias(f"f{i}__{j}")
-                        for j, c in enumerate(cand.out_cols)
-                    ],
-                )
-            except Exception:
-                continue
-            pieces.append(sel)
-            # per-column Spark types (fields after RID + presence marker)
-            # so dtypes can be restored after the outer join promotes them
-            col_types = [f.dataType.simpleString() for f in sel.schema.fields[2:]]
-            meta.append((key, list(cand.out_cols), i, col_types))
-        _tr(f"build ({len(pieces)} pieces)")
-        if not pieces:
-            return
-
-        pd_by_spark = _PD_BY_SPARK
-
-        def _consume(pdf, group_meta) -> None:
-            for key, out_cols, i, col_types in group_meta:
-                mask = pdf[f"f{i}__p"] == 1
-                renames = {f"f{i}__{j}": c for j, c in enumerate(out_cols)}
-                fr = (
-                    pdf.loc[mask, [RID] + list(renames)]
-                    .rename(columns=renames)
-                    # RID order, not join-output order: downstream scores
-                    # (sig_linearness tie order, chart payloads) are
-                    # position-sensitive, and the solo channel_frame path
-                    # yields RID order — batch and solo must agree byte
-                    # for byte no matter which one filled the memo
-                    .sort_values(RID, kind="mergesort")
-                    .reset_index(drop=True)
-                )
-                for c, t in zip(out_cols, col_types):
-                    want = pd_by_spark.get(t)
-                    if want is not None and str(fr[c].dtype) != want:
-                        # astype('bool') on an object column silently maps
-                        # None->False / NaN->True instead of raising like
-                        # the int casts do — genuine nulls must stay None
-                        # (the solo toPandas path keeps them)
-                        if want == "bool" and fr[c].isna().any():
-                            continue
-                        try:
-                            fr[c] = fr[c].astype(want)
-                        except (ValueError, TypeError):
-                            pass  # genuine nulls: solo toPandas keeps float too
-                self._frames[key] = fr
-
-        # chunked joins: Catalyst analysis of an N-way join tree grows
-        # super-linearly in N (a single 24-way join measured ~4.5 s of
-        # pure planning on 500 cached rows) — six-frame joins analyzed
-        # and executed concurrently cost a fraction of that
-        CHUNK = 6
-
-        def _one_group(lo: int) -> None:
-            group = pieces[lo : lo + CHUNK]
-            gmeta = meta[lo : lo + CHUNK]
-            try:
-                joined = functools.reduce(
-                    lambda a, b: a.join(b, RID, "outer"), group
-                )
-                pdf = joined.toPandas()
-                _tr(f"chunk@{lo} toPandas")
-                _consume(pdf, gmeta)
-            except Exception:
-                return  # group falls through to the per-frame pool path
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(4) as pool:
-            list(pool.map(_one_group, range(0, len(pieces), CHUNK)))
 
     def _derived_base(
         self,
@@ -1104,13 +849,6 @@ def _split_name_conflicts(by_x: dict[str, list]) -> list[dict[str, list]]:
             else:
                 groups.append((dict(named), {x_col: [entry]}))
     return [g for _, g in groups]
-
-
-def _dim_ok(cand: Candidate, t: str, want_dim: int | None) -> bool:
-    sig = CORE_T.get(t)
-    if sig is not None:
-        return want_dim is None or sig.out_dim == want_dim
-    return want_dim is None or len(cand.out_cols) == want_dim
 
 
 def recommend(

@@ -15,10 +15,9 @@ Spark-first mapping:
     faithful; at scale the engine samples before calling.
   * **dbscan** — numpy DBSCAN (eps=0.25, min_samples=5 like
     Tfunctions.py:90-94) on the sample; sklearn-free.
-  * **tsne / umap** — sklearn/umap-learn are not in this environment:
-    gated behind import-try with a documented deterministic fallback
-    (classical MDS), column names kept per family so chart signatures
-    still match.
+  * **tsne / umap** — in-repo numpy implementations (``numpy_tsne``,
+    ``numpy_umap``) of the real algorithms, deterministic, on the same
+    bounded sample; no sklearn/umap-learn code path.
 
 All runners take a DataFrame WITH a ``__rid`` column and return
 ``__rid`` + output columns, so results positional-join back to any
@@ -40,6 +39,9 @@ KMEANS_K = 3
 DBSCAN_EPS = 0.25
 DBSCAN_MIN_SAMPLES = 5
 MIN_NUMERIC_COLS = 3  # reference guard: >2 numeric columns (Tengine.py:217-220)
+# rows of the RID-ordered sample kmeans fits its centers on (the driver
+# twin in ml/coret_local takes the same cap)
+KMEANS_FIT_CAP = 10_000
 
 
 def _guard_cols(df: DataFrame) -> list[str] | None:
@@ -215,7 +217,7 @@ def _lloyd(x: np.ndarray, k: int, seed: int, iters: int = 25) -> np.ndarray:
     return c
 
 
-def kmeans_fit(df: DataFrame, fit_cap: int = 10_000) -> dict | None:
+def kmeans_fit(df: DataFrame, fit_cap: int = KMEANS_FIT_CAP) -> dict | None:
     """Fit stage of KMeans (k=3, seed=9): min/max scaling constants from
     one exact aggregate, centers from seeded Lloyd's on a bounded
     deterministic sample (``orderBy(RID).limit``). Returns literal
@@ -252,7 +254,7 @@ def kmeans_fit(df: DataFrame, fit_cap: int = 10_000) -> dict | None:
     }
 
 
-def run_kmeans(df: DataFrame, fit_cap: int = 10_000) -> DataFrame | None:
+def run_kmeans(df: DataFrame, fit_cap: int = KMEANS_FIT_CAP) -> DataFrame | None:
     """KMeans (k=3, seed=9) → 1 category column.
 
     Centers are fit with seeded Lloyd's on a bounded deterministic
@@ -626,50 +628,40 @@ def _sample_transform(df: DataFrame, out_cols: list[str], fn) -> DataFrame | Non
     return spark.createDataFrame(out)
 
 
+def _dbscan_str(x: np.ndarray) -> np.ndarray:
+    return numpy_dbscan(x, DBSCAN_EPS, DBSCAN_MIN_SAMPLES).astype(str)
+
+
+# output columns + numpy function of each sample-bound transform, applied
+# to the min-max-scaled RID-ordered sample (shared with ml/coret_local)
+SAMPLE_TRANSFORMS = {
+    "mds": (["MDS-1", "MDS-2"], classical_mds),
+    "tsne": (["tSNE-1", "tSNE-2"], numpy_tsne),
+    "umap": (["UMAP-1", "UMAP-2"], numpy_umap),
+    "dbscan": (["Category by DBSCAN"], _dbscan_str),
+}
+
+
 def run_mds(df: DataFrame) -> DataFrame | None:
-    return _sample_transform(df, ["MDS-1", "MDS-2"], classical_mds)
+    return _sample_transform(df, *SAMPLE_TRANSFORMS["mds"])
 
 
 def run_tsne(df: DataFrame) -> DataFrame | None:
     """t-SNE with the reference's configuration (perplexity=5,
-    method="exact" — Tfunctions.py:18-25): sklearn's implementation when
-    the library exists, else the in-repo exact numpy implementation
-    (``numpy_tsne``, same algorithm, deterministic PCA init)."""
-    try:
-        from sklearn.manifold import TSNE  # optional: absent from this env
-
-        def fn(x: np.ndarray) -> np.ndarray:
-            init = "pca" if len(x) < 100 else "random"
-            return TSNE(
-                n_components=2, perplexity=5, init=init, random_state=0, method="exact"
-            ).fit_transform(x)
-
-    except ImportError:
-        fn = numpy_tsne
-    return _sample_transform(df, ["tSNE-1", "tSNE-2"], fn)
+    method="exact" — Tfunctions.py:18-25), in-repo exact numpy
+    implementation (``numpy_tsne``, deterministic PCA init)."""
+    return _sample_transform(df, *SAMPLE_TRANSFORMS["tsne"])
 
 
 def run_umap(df: DataFrame) -> DataFrame | None:
-    """UMAP: umap-learn's implementation when the library exists, else
-    the in-repo implementation (``numpy_umap`` — real fuzzy-simplicial
-    graph and loss, deterministic full-batch optimizer)."""
-    try:
-        import umap  # optional: absent from this env
-
-        def fn(x: np.ndarray) -> np.ndarray:
-            return umap.UMAP(n_components=2, random_state=0).fit_transform(x)
-
-    except ImportError:
-        fn = numpy_umap
-    return _sample_transform(df, ["UMAP-1", "UMAP-2"], fn)
+    """UMAP, in-repo implementation (``numpy_umap`` — real
+    fuzzy-simplicial graph and loss, deterministic full-batch
+    optimizer)."""
+    return _sample_transform(df, *SAMPLE_TRANSFORMS["umap"])
 
 
 def run_dbscan(df: DataFrame) -> DataFrame | None:
-    def fn(x: np.ndarray) -> np.ndarray:
-        return numpy_dbscan(x, DBSCAN_EPS, DBSCAN_MIN_SAMPLES).astype(str)
-
-    out = _sample_transform(df, ["Category by DBSCAN"], fn)
-    return out
+    return _sample_transform(df, *SAMPLE_TRANSFORMS["dbscan"])
 
 
 def run_lida(df: DataFrame, label_col: str | None = None) -> DataFrame | None:

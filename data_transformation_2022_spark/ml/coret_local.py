@@ -1,30 +1,30 @@
 """Driver-side (pandas/numpy) evaluator for core-T runners over the
 engine's bounded sample — the core-T extension of the steps_local
-contract (r13 opt #3, VERDICT r13 "Next round" #1).
+contract.
 
-The engine's core-T channel frames run ``CORE_T_RUNNERS[t]`` over a
-≤ ``sample_cap``-row derived sample and collect. The runners' math is
-driver numpy either way (mds/tsne/umap/dbscan collect the sample and
-compute locally; pca/kmeans fit from two bounded aggregates) — but each
-invocation pays Catalyst plans + 2-3 Spark job round-trips on ≤500
-rows (guide §1.2: the task here is the driver). This module evaluates
-the SAME runner semantics directly on the pandas sample prefix that
-``eval_steps_local`` proved equivalent to the Spark derivation.
+The engine's core-T channel frames are ``CORE_T_RUNNERS[t]`` over a
+≤ ``sample_cap``-row derived sample. The runners' math is driver numpy
+either way (mds/tsne/umap/dbscan collect the sample and compute
+locally; pca/kmeans fit from two bounded aggregates), but each Spark
+invocation pays Catalyst plans + 2-3 job round-trips on ≤1000 rows.
+This module evaluates the SAME runner semantics directly on the pandas
+sample prefix that ``eval_steps_local`` proved equivalent to the Spark
+derivation.
 
 Strict equivalence contract (same shape as operators/steps_local.py):
 
 * ``eval_coret_local`` returns exactly what
-  ``CORE_T_RUNNERS[t](derived).toPandas()`` would return — values,
-  dtypes, column order, ROW order — or ``None`` whenever that cannot be
-  proven from the tracked schema. ``None`` means "use the Spark path".
-* Row-order proof: ``pca``/``kmeans`` emit rows in the derived frame's
-  own order, which equals RID order only for chains with no
-  rank/nominalize step (the cached sample collects RID-ascending; pure
-  projections preserve it — the same invariant the step-only batch path
-  already relies on). Chains containing rank/nominalize therefore fall
-  back for these two. ``mds``/``tsne``/``umap``/``dbscan`` re-sort by
-  RID inside ``_collect_sample``, so they are order-safe for ANY chain
-  the step evaluator can prove.
+  ``CORE_T_RUNNERS[t](derived).toPandas()`` sorted by RID would return —
+  values, dtypes, column order — in RID order, or ``None`` whenever
+  that cannot be proven from the tracked schema. ``None`` means "use
+  the Spark path". No row-order proof is needed: every runner either
+  fits on RID-ordered rows (``orderBy(RID).limit``) or on
+  order-independent aggregates (min/max, exact decimal sums), and
+  assigns row-wise, so the output is re-sorted by RID whatever the
+  input order — rank/nominalize chains included.
+* ``PROVEN_NONE`` is returned when the runner's numeric-column guard
+  provably fails from the tracked schema: the Spark runner would
+  return None, so the caller skips it.
 * ``pca``'s exact path folds moment sums in DECIMAL(38,30). Spark's
   double→decimal cast routes through Java's shortest-round-trip
   ``Double.toString``; the local twin mirrors it with
@@ -39,9 +39,9 @@ Strict equivalence contract (same shape as operators/steps_local.py):
   re-verified here), decimal inputs for pca/kmeans (cast semantics),
   lda (distributed MLlib) and lida (label-column resolution) always.
 * tests/test_coret_local.py pins the contract against the live Spark
-  runners over typed frames and the real bench sample, plus a
-  recommend()-level ON/OFF byte A/B. ``SPARK_GRAFT_NO_LOCAL_STEPS``
-  disables this evaluator together with the step evaluator.
+  runners over typed frames, rank chains and the real bench sample,
+  plus recommend()-level byte A/Bs against the evaluators forced to
+  refuse. There is no switch to turn the evaluator off.
 """
 
 from __future__ import annotations
@@ -56,15 +56,10 @@ from . import coret as _coret
 
 _DEC_Q = Decimal(1).scaleb(-30)  # decimal(38,30) quantum
 
-# runners whose output row order is the derived frame's own order —
-# servable only when that order is provably RID (no rank/nominalize)
-_ORDER_BOUND = {"pca", "kmeans"}
-# runners that re-sort by RID internally (_collect_sample) — order-safe
-_ORDER_FREE = {"mds", "tsne", "umap", "dbscan"}
 # runners whose FIRST act is the numeric-column guard (_guard_cols:
 # < MIN_NUMERIC_COLS numeric columns → the runner returns None) — for
 # these the None result is provable from the tracked schema alone
-_GUARDED = _ORDER_BOUND | _ORDER_FREE | {"lda"}
+_GUARDED = {"pca", "kmeans", "lda", *_coret.SAMPLE_TRANSFORMS}
 
 # Sentinel: "the Spark runner would PROVABLY return None" — callers
 # treat it as the final None result (skip the Spark path entirely),
@@ -96,78 +91,50 @@ def eval_coret_local(
     dpdf: pd.DataFrame,
     dtypes: list[tuple[str, str]],
     coret: str,
-    rid_order: bool,
 ) -> pd.DataFrame | None:
     """Evaluate a core-T runner on the proven-equivalent pandas sample;
-    return exactly ``CORE_T_RUNNERS[coret](derived).toPandas()`` or
+    return exactly ``CORE_T_RUNNERS[coret](derived).toPandas()`` in RID
+    order, ``PROVEN_NONE`` when the runner provably returns None, or
     ``None`` when equivalence cannot be proven (caller uses Spark)."""
     tmap = dict(dtypes)
     cols = _numeric_cols(dtypes)
     if coret in _GUARDED and len(cols) < _coret.MIN_NUMERIC_COLS:
         # the runner's own _guard_cols would return None; the tracked
         # types ARE the derived schema (steps_local contract), so the
-        # None result is proven without building the Spark derivation —
-        # order-independent, hence checked before the rid_order gate
+        # None result is proven without building the Spark derivation
         return PROVEN_NONE
-    if coret in _ORDER_BOUND and not rid_order:
-        return None
-    if coret not in _ORDER_BOUND and coret not in _ORDER_FREE:
-        return None  # lda (distributed MLlib), lida, unknown
     if RID not in dpdf.columns:
         return None
-    if coret in _ORDER_FREE:
+    if coret in _coret.SAMPLE_TRANSFORMS:
         return _sample_transform_local(dpdf, cols, coret)
+    if coret not in ("pca", "kmeans"):
+        return None  # lda (distributed MLlib), lida, unknown
     # pca/kmeans: aggregate-fit paths, null/NaN- and decimal-sensitive
     for c in cols:
         if _base(tmap[c]) == "decimal":
             return None
-    sub = dpdf[cols]
-    if bool(sub.isna().any().any()):
+    if bool(dpdf[cols].isna().any().any()):
         return None  # Spark aggregates skip nulls / order NaN last
+    # RID order: the fits' row samples are orderBy(RID).limit, and the
+    # row-wise projection/assignment is then emitted in RID order
+    dpdf = dpdf.sort_values(RID, kind="mergesort").reset_index(drop=True)
     if coret == "pca":
-        return _pca_local(dpdf, cols, tmap)
-    return _kmeans_local(dpdf, cols, tmap)
+        return _pca_local(dpdf, cols)
+    return _kmeans_local(dpdf, cols)
 
 
 # ---------------------------------------------------------------------------
-# order-free sample transforms (mds / tsne / umap / dbscan)
+# sample-bound transforms (mds / tsne / umap / dbscan)
 # ---------------------------------------------------------------------------
 
 
 def _sample_transform_local(dpdf: pd.DataFrame, cols: list[str], coret: str):
     """Mirror of coret._sample_transform: the Spark path collects
     ``select(RID, *cols).orderBy(RID).limit(2000)``, min-max scales,
-    runs the SAME numpy function, then round-trips the result through
-    ``createDataFrame(...).toPandas()`` (dtype-preserving for the
-    int64/float64/str frames these produce)."""
-    out_cols, fns = {
-        "mds": (["MDS-1", "MDS-2"], _coret.classical_mds),
-        "tsne": (["tSNE-1", "tSNE-2"], None),
-        "umap": (["UMAP-1", "UMAP-2"], None),
-        "dbscan": (["Category by DBSCAN"], None),
-    }[coret]
-    # resolve the exact fn the Spark runner would use (sklearn/umap-learn
-    # gates): run_tsne/run_umap choose at call time — mirror that choice
-    if coret == "tsne":
-        try:
-            from sklearn.manifold import TSNE  # noqa: F401
-
-            return None  # library present: the Spark runner would use it
-        except ImportError:
-            fns = _coret.numpy_tsne
-    elif coret == "umap":
-        try:
-            import umap  # noqa: F401
-
-            return None
-        except ImportError:
-            fns = _coret.numpy_umap
-    elif coret == "dbscan":
-        def fns(x: np.ndarray) -> np.ndarray:
-            return _coret.numpy_dbscan(
-                x, _coret.DBSCAN_EPS, _coret.DBSCAN_MIN_SAMPLES
-            ).astype(str)
-
+    runs the SAME numpy function (``coret.SAMPLE_TRANSFORMS``), then
+    round-trips the result through ``createDataFrame(...).toPandas()``
+    (dtype-preserving for the int64/float64/str frames these produce)."""
+    out_cols, fn = _coret.SAMPLE_TRANSFORMS[coret]
     # _collect_sample: RID-ascending first 2000 rows of (RID, *cols)
     pdf = (
         dpdf[[RID, *cols]]
@@ -179,7 +146,7 @@ def _sample_transform_local(dpdf: pd.DataFrame, cols: list[str], coret: str):
     lo, hi = x.min(axis=0), x.max(axis=0)
     span = np.where(hi > lo, hi - lo, 1.0)
     scaled = (x - lo) / span
-    res = fns(scaled)
+    res = fn(scaled)
     out = pd.DataFrame({RID: pdf[RID].to_numpy()})
     for i, c in enumerate(out_cols):
         vals = res[:, i] if res.ndim == 2 else res
@@ -202,7 +169,7 @@ def _to_f64(series: pd.Series) -> np.ndarray:
     return series.to_numpy().astype(np.float64)
 
 
-def _pca_local(dpdf: pd.DataFrame, cols: list[str], tmap: dict[str, str]):
+def _pca_local(dpdf: pd.DataFrame, cols: list[str]):
     p = len(cols)
     n = len(dpdf)
     if n == 0:
@@ -280,7 +247,7 @@ def _project_local(dpdf: pd.DataFrame, fit: dict, names: tuple[str, str]):
 # ---------------------------------------------------------------------------
 
 
-def _kmeans_local(dpdf: pd.DataFrame, cols: list[str], tmap: dict[str, str]):
+def _kmeans_local(dpdf: pd.DataFrame, cols: list[str]):
     n = len(dpdf)
     if n == 0:
         return None
@@ -301,9 +268,9 @@ def _kmeans_local(dpdf: pd.DataFrame, cols: list[str], tmap: dict[str, str]):
     scaled = [
         (_to_f64(dpdf[c]) - lo[i]) / span[i] for i, c in enumerate(cols)
     ]
-    # fit sample: RID order == frame order (rid_order proven by caller),
-    # first fit_cap rows (run_kmeans default 10_000)
-    sample = np.column_stack(scaled)[:10_000]
+    # fit sample: the first KMEANS_FIT_CAP rows in RID order (the frame
+    # is RID-sorted by eval_coret_local), as kmeans_fit's orderBy.limit
+    sample = np.column_stack(scaled)[: _coret.KMEANS_FIT_CAP]
     if len(sample) == 0:
         return None
     centers = _coret._lloyd(sample, _coret.KMEANS_K, _coret.KMEANS_SEED)

@@ -1,22 +1,27 @@
 """Driver-side (pandas) evaluator for sample-bounded Step chains.
 
 The engine's channel frames run rank/select/arithmetic chains over a
-bounded (≤ ``sample_cap``-row) cached sample, then collect — the values
-are trivial, but every chain pays Catalyst analysis + codegen + a job
-round-trip per candidate (measured: the batched sample-side joins alone
-were ~2.4 s of a 9.8 s warm ``recommend()`` at sf0.1, pure
-planning/scheduling on 500 rows — guide §1.2 "per-task work", where the
-task here is the driver). This module evaluates the SAME Step algebra
-directly on the collected pandas sample.
+bounded (≤ ``sample_cap``-row) sample — the values are trivial, but on
+Spark every chain pays Catalyst analysis + codegen + a job round-trip
+per candidate (measured: the sample-side Spark joins alone were ~2.4 s
+of a 9.8 s warm ``recommend()`` at sf0.1, pure planning/scheduling on
+500 rows). This module evaluates the SAME Step algebra directly on the
+collected pandas sample; the engine builds every step-only channel
+frame with it wherever it can prove the result, and there is no switch
+to turn it off.
 
 Strict equivalence contract (the reason this is safe to use in query
 paths whose goldens are byte-stable):
 
 * ``eval_steps_local`` returns exactly what ``apply_tpath(...).toPandas()``
   over the same rows would return — values, pandas dtypes (via the same
-  Arrow type mapping), column order, row order — or ``None`` whenever it
-  cannot PROVE that equivalence from the tracked Spark schema. Callers
-  must treat ``None`` as "use the Spark path", never as a failure.
+  Arrow type mapping), column order — or ``None`` whenever it cannot
+  PROVE that equivalence from the tracked Spark schema. Callers must
+  treat ``None`` as "use the Spark path", never as a failure.
+* Rows come back in the input frame's order (every op is row-wise or
+  ranks by (value, RID) value). No row-order proof is needed: the
+  engine feeds the RID-sorted sample and sorts its Spark fallback by
+  RID, so every channel frame is RID-ordered either way.
 * Fall-back triggers are structural, not data-sampled: unsupported op
   (``astype``), unsupported/ambiguous type combinations (decimal inputs,
   float32 mixed with integers — Spark folds through float32 where numpy

@@ -401,22 +401,6 @@ def profile_table_cached(
 _N_QUANTILES = 33
 
 
-def wasserstein_matrix(
-    df: DataFrame, cols: list[str], n_q: int = _N_QUANTILES
-) -> np.ndarray:
-    """Pairwise W1 distance between min-max-normalized column
-    distributions, from approxQuantile sketches — one sketch pass, then
-    driver-side O(cols²·n_q) numpy (reference: exact scipy Wasserstein
-    over raw 400-row columns, spreadsheet.py:187-190).
-
-    Standalone entry point; ``profile_table`` computes the same sketches
-    inside its main aggregate pass and goes straight to
-    ``wasserstein_from_quantiles`` (one fewer table scan)."""
-    probs = list(np.linspace(0.0, 1.0, n_q))
-    qs = df.stat.approxQuantile(cols, probs, 0.01)
-    return wasserstein_from_quantiles({c: q for c, q in zip(cols, qs)}, cols)
-
-
 def wasserstein_from_quantiles(
     quantiles: dict[str, list], cols: list[str]
 ) -> np.ndarray:

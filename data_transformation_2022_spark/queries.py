@@ -2492,8 +2492,7 @@ def q_coret_mds(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("coret_tsne", None, tags=("ml",))
 def q_coret_tsne(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-SNE core-T (reference Tfunctions.py:18-25, perplexity=5) on a
-    bounded sample; sklearn-gated with a deterministic classical-MDS
-    fallback under the tSNE column names (ml.coret.run_tsne)."""
+    bounded sample: the in-repo exact numpy t-SNE (ml.coret.run_tsne)."""
     from .ml.coret import run_tsne
     from .operators.steps import RID
 
@@ -2504,8 +2503,8 @@ def q_coret_tsne(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("coret_umap", None, tags=("ml",))
 def q_coret_umap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UMAP core-T (reference Tfunctions.py:33-37) on a bounded sample;
-    umap-learn-gated with a classical-MDS fallback (ml.coret.run_umap)."""
+    """UMAP core-T (reference Tfunctions.py:33-37) on a bounded sample:
+    the in-repo numpy UMAP (ml.coret.run_umap)."""
     from .ml.coret import run_umap
     from .operators.steps import RID
 

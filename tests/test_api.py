@@ -80,6 +80,40 @@ def test_search_cat_lines_present(session):
     assert len(ret["charts"]) >= 1
 
 
+def test_add_t_preview_with_dates_encodes(spark):
+    """An add_t preview of a table with a date and a timestamp column is
+    encodable as the server encodes it: dates and timestamps as ISO
+    strings, a null timestamp (NaT after collect) as null."""
+    import datetime
+
+    from pyspark.sql import types as T
+
+    from data_transformation_2022_spark.api import _json_default
+
+    schema = T.StructType(
+        [
+            T.StructField("v", T.LongType()),
+            T.StructField("d", T.DateType()),
+            T.StructField("ts", T.TimestampType()),
+        ]
+    )
+    rows = [
+        (i, datetime.date(2020, 1, 1 + i),
+         None if i == 2 else datetime.datetime(2021, 3, 4, 5, 6, i))
+        for i in range(5)
+    ]
+    s = EngineSession(spark, sample_cap=100)
+    s._ingest(spark.createDataFrame(rows, schema))
+    ret = s.add_t("root", "rank", {"i_type": "==", "i": ["v"], "o_type": "append"})
+    back = json.loads(json.dumps(ret, default=_json_default))
+    prev = back["result"]["preview"]
+    assert prev["d"] == [f"2020-01-0{1 + i}" for i in range(5)]
+    assert prev["ts"] == [
+        None if i == 2 else f"2021-03-04T05:06:0{i}" for i in range(5)
+    ]
+    assert prev["rank v"] == [1, 2, 3, 4, 5]
+
+
 # ---------------------------------------------------------------------------
 # live HTTP integration: the four routes served end-to-end (stdlib shim —
 # the container has no Flask; create_http_server is the same session

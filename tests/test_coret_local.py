@@ -2,15 +2,17 @@
 (ml/coret_local.py) against the live Spark runners.
 
 Contract under test (mirror of test_steps_local): whenever
-``eval_coret_local`` returns non-None it must equal
-``CORE_T_RUNNERS[t](derived).toPandas()`` byte-for-byte — values,
-dtypes, column order, row order. ``None`` means "use Spark"; the tests
-also pin WHICH shapes must fall back (nulls/NaN/decimal for pca+kmeans,
-rank chains for the order-bound runners, lda always) and that the
-order-free transforms (mds/dbscan/tsne/umap) keep serving for rank
-chains and null-bearing frames. The decimal(38,30) cast replication is
-tripwired against the LIVE Spark cast so a JVM whose Double.toString
-diverges from Python repr fails here instead of drifting silently.
+``eval_coret_local`` returns a frame it must equal
+``CORE_T_RUNNERS[t](derived)`` collected in RID order, byte-for-byte —
+values, dtypes, column order, row order — rank chains included.
+``None`` means "use Spark"; the tests also pin WHICH shapes must fall
+back (nulls/NaN/decimal for pca+kmeans, lda always) and that the
+sample-bound transforms (mds/dbscan/tsne/umap) keep serving for
+null-bearing frames. The decimal(38,30) cast replication is tripwired
+against the LIVE Spark cast so a JVM whose Double.toString diverges
+from Python repr fails here instead of drifting silently. The
+recommend()-level A/Bs compare the search payload with the evaluators
+on against the evaluators forced to refuse (every frame from Spark).
 """
 
 from __future__ import annotations
@@ -48,7 +50,7 @@ def _base_pdf(n: int = 40) -> pd.DataFrame:
     )
 
 
-def _assert_serves(spark, pdf, coret, steps=None, rid_order=True):
+def _assert_serves(spark, pdf, coret, steps=None):
     sdf = spark.createDataFrame(pdf)
     dtypes = sdf.dtypes
     dpdf = pdf
@@ -58,27 +60,34 @@ def _assert_serves(spark, pdf, coret, steps=None, rid_order=True):
         dpdf, dtypes = res
         with small_input_mode():
             sdf = apply_tpath(sdf, steps)
-    loc = eval_coret_local(dpdf, dtypes, coret, rid_order=rid_order)
+    loc = eval_coret_local(dpdf, dtypes, coret)
     assert loc is not None, f"expected local serve for {coret}"
     with small_input_mode():
         sp = CORE_T_RUNNERS[coret](sdf)
-    assert sp is not None
-    spdf = sp.toPandas()
-    # order-free runners re-sort by RID internally, so both frames are
-    # RID-ordered; order-bound runners emit the derived frame's order,
-    # which equals RID here by construction
+        assert sp is not None
+        # the local frame is RID-ordered by contract; pca/kmeans emit the
+        # derived frame's own order, which a rank step changes
+        spdf = sp.orderBy(RID).toPandas()
     pd.testing.assert_frame_equal(
-        loc.reset_index(drop=True),
-        spdf.reset_index(drop=True),
+        loc,
+        spdf,
         check_exact=True,
         check_dtype=True,
     )
 
 
-def _assert_fallback(pdf, dtypes, coret, rid_order=True):
+def _assert_fallback(pdf, dtypes, coret):
     assert (
-        eval_coret_local(pdf, dtypes, coret, rid_order=rid_order) is None
+        eval_coret_local(pdf, dtypes, coret) is None
     ), f"expected fallback for {coret}"
+
+
+_RANK_SELECT = [
+    Step(t="rank", i_type="==", i=["a", "b", "d"], o_type="append",
+         index=["rank a", "rank b", "rank d"]),
+    Step(t="select", i_type="==", i=["rank a", "rank b", "rank d"],
+         o_type="new_table", index=[]),
+]
 
 
 @pytest.mark.parametrize("coret", LOCAL_CORETS)
@@ -91,20 +100,17 @@ def test_order_free_serve_rank_chain(spark, coret):
     """Rank chains reorder the Spark derived frame, but the sample-bound
     transforms re-sort by RID — they must keep serving (values ranked by
     the pinned steps_local contract) and match byte-for-byte."""
-    steps = [
-        Step(t="rank", i_type="==", i=["a", "b", "d"], o_type="append",
-             index=["rank a", "rank b", "rank d"]),
-        Step(t="select", i_type="==", i=["rank a", "rank b", "rank d"],
-             o_type="new_table", index=[]),
-    ]
-    _assert_serves(spark, _base_pdf(), coret, steps=steps, rid_order=False)
+    _assert_serves(spark, _base_pdf(), coret, steps=_RANK_SELECT)
 
 
 @pytest.mark.parametrize("coret", ("pca", "kmeans"))
 def test_order_bound_fallback_on_rank(spark, coret):
-    pdf = _base_pdf()
-    sdf = spark.createDataFrame(pdf)
-    _assert_fallback(pdf, sdf.dtypes, coret, rid_order=False)
+    """pca/kmeans emit rows in the derived frame's own order, which a
+    rank step changes on Spark; the local twin serves the rank → select
+    chain anyway, in RID order, byte-equal to
+    ``CORE_T_RUNNERS[t](apply_tpath(sample, rank → select))`` sorted by
+    RID (their fits read RID-ordered rows or order-free aggregates)."""
+    _assert_serves(spark, _base_pdf(), coret, steps=_RANK_SELECT)
 
 
 @pytest.mark.parametrize("coret", ("pca", "kmeans"))
@@ -149,8 +155,7 @@ def test_fallback_lda_and_proven_none_guard(spark):
     narrow = pdf[[RID, "a", "b"]]
     ntypes = [(RID, "bigint"), ("a", "bigint"), ("b", "double")]
     for t in ("pca", "kmeans", "mds", "dbscan", "tsne", "umap", "lda"):
-        assert eval_coret_local(narrow, ntypes, t, rid_order=True) is PROVEN_NONE
-        assert eval_coret_local(narrow, ntypes, t, rid_order=False) is PROVEN_NONE
+        assert eval_coret_local(narrow, ntypes, t) is PROVEN_NONE
     nsdf = spark.createDataFrame(narrow)
     with small_input_mode():
         assert CORE_T_RUNNERS["pca"](nsdf) is None
@@ -191,10 +196,13 @@ def test_decimal_cast_matches_live_spark(spark):
 
 
 def test_bench_pool_serve_rate(spark, sf_dir):
-    """Rot-guard: the unranked core-T-eligible dm candidates of the
-    bench table must SERVE locally (and byte-match Spark), so the
-    optimization can't silently decay into always-fallback."""
-    from data_transformation_2022_spark.engine import Executor
+    """Rot-guard: the core-T-eligible dm candidates of the bench table —
+    rank/nominalize chains included — must SERVE locally and byte-match
+    the Spark runner over ``apply_tpath(sample, steps)`` sorted by RID,
+    so the optimization can't silently decay into always-fallback. A
+    proven None must agree with the runner's own None."""
+    from data_transformation_2022_spark.engine import NOT_CALCU_DMT, Executor
+    from data_transformation_2022_spark.ml.coret_local import PROVEN_NONE
     from data_transformation_2022_spark.plans.search import enumerate_tpaths
     from data_transformation_2022_spark.profiler import profile_table
     from data_transformation_2022_spark.queries import _t
@@ -203,33 +211,103 @@ def test_bench_pool_serve_rate(spark, sf_dir):
     pools = enumerate_tpaths(profile_table(li), max_depth=2)
     ex = Executor(li, 120)
     try:
+        assert NOT_CALCU_DMT  # arithmetic chains never reach a core-T
         eligible = [
             c for c in pools["dm"]
-            if not any(s.t in ("sum", "sub", "mul", "div", "rank", "nominalize") for s in c.steps)
+            if not any(s.t in ("sum", "sub", "mul", "div") for s in c.steps)
         ]
-        assert eligible, "bench dm pool lost its unranked candidates"
+        assert any(
+            s.t in ("rank", "nominalize") for c in eligible for s in c.steps
+        ), "bench dm pool lost its rank chains"
+        pdf, types = ex._sample_local()
         served = compared = 0
         for cand in eligible:
+            res = eval_steps_local(pdf, types, cand.steps)
+            assert res is not None, f"step evaluator refused {cand.steps}"
             for t in ("pca", "kmeans"):
-                loc = ex._local_coret_frame(cand, t)
+                loc = eval_coret_local(*res, t)
                 if loc is None:
                     continue
                 served += 1
                 with small_input_mode():
-                    derived = ex._sample_derived(cand.steps)
-                    sp = CORE_T_RUNNERS[t](derived)
-                if sp is None:
-                    continue
+                    sp = CORE_T_RUNNERS[t](apply_tpath(ex.sample, cand.steps))
+                    if loc is PROVEN_NONE:
+                        assert sp is None
+                        continue
+                    spdf = sp.orderBy(RID).toPandas()
                 compared += 1
                 pd.testing.assert_frame_equal(
-                    loc.reset_index(drop=True),
-                    sp.toPandas().reset_index(drop=True),
-                    check_exact=True,
-                    check_dtype=True,
+                    loc, spdf, check_exact=True, check_dtype=True
                 )
-        assert served >= 2 * len(eligible) * 0.5, (
-            f"core-T local serve rate collapsed ({served}/{2 * len(eligible)})"
+        assert served == 2 * len(eligible), (
+            f"core-T local serve rate fell ({served}/{2 * len(eligible)})"
         )
         assert compared >= 1
     finally:
         ex.release()
+
+
+# ---------------------------------------------------------------------------
+# engine-level A/B: search payload identical with the evaluators refusing
+# ---------------------------------------------------------------------------
+
+
+def _spreadsheet(rows: int = 240) -> tuple[list[str], list[list]]:
+    """A small spreadsheet-shaped table (ordinal year, one nominal, two
+    numeric name families) whose dm pool holds a (rank, select) chain."""
+    rng = np.random.default_rng(3)
+    i = np.arange(rows)
+    cols: dict[str, list] = {
+        "Year": (1990 + i // 3).tolist(),
+        "Region": [("North", "South", "East")[j] for j in i % 3],
+    }
+    lat = rng.normal(size=rows)
+    for k in range(3):
+        v = lat * rng.uniform(0.9, 1.1) + rng.normal(scale=0.05, size=rows)
+        cols[f"Temp_{k}"] = np.round(v, 3).tolist()
+    lat = rng.exponential(size=rows)
+    for k in range(3):
+        v = 100 * (lat * rng.uniform(0.9, 1.1) + rng.normal(scale=0.05, size=rows))
+        cols[f"Sales {2015 + k}"] = np.round(v).astype("int64").tolist()
+    headers = list(cols)
+    return headers, [list(r) for r in zip(*(cols[h] for h in headers))]
+
+
+@pytest.mark.parametrize("table", ["lineitem", "spreadsheet"])
+def test_recommend_identical_with_evaluators_refusing(spark, sf_dir, monkeypatch, table):
+    """The search payload (and every chart's data frame) with the driver
+    evaluators on equals the one built entirely by the Spark fallback."""
+    import json
+
+    from data_transformation_2022_spark import engine
+    from data_transformation_2022_spark.api import EngineSession, _json_default
+    from data_transformation_2022_spark.ml import coret_local
+    from data_transformation_2022_spark.plans.search import enumerate_tpaths
+
+    headers, body = _spreadsheet()
+
+    def search():
+        s = EngineSession(spark, sample_cap=400)
+        if table == "lineitem":
+            s.ingest_path(f"{sf_dir}/lineitem.parquet")
+            payload = {"dm_ts": ["pca", "kmeans"]}
+        else:
+            s.ingest_records(headers, body)
+            dm = enumerate_tpaths(s.profile, max_depth=2)["dm"]
+            assert any(
+                [st.t for st in c.steps] == ["rank", "select"] for c in dm
+            ), "spreadsheet dm pool lost its (rank, select) chain"
+            payload = {}
+        out = json.dumps(s.search(payload), sort_keys=True, default=_json_default)
+        data = [c.data for c in s.result.charts]
+        s._sample.unpersist()
+        return out, data
+
+    on, on_data = search()
+    monkeypatch.setattr(engine, "eval_steps_local", lambda *a: None)
+    monkeypatch.setattr(coret_local, "eval_coret_local", lambda *a: None)
+    off, off_data = search()
+    assert on == off
+    assert len(on_data) == len(off_data) > 0
+    for a, b in zip(on_data, off_data):
+        pd.testing.assert_frame_equal(a, b, check_exact=True, check_dtype=True)

@@ -446,11 +446,9 @@ def test_release_joined_before_next_executor(spark):
 
 
 def test_release_reclaims_spark_storage(spark):
-    """r13 VERDICT watch-list #2: release() trades the explicit
-    localCheckpoint unpersists for ContextCleaner (reference-tracked,
-    GC-driven) reclamation. A serving loop must therefore return the
-    Spark-side storage to its pre-loop level once references drop and a
-    GC cycle runs — this pins that the memo-clear really releases the
+    """A serving loop must return the Spark-side storage to its pre-loop
+    level once references drop and a GC cycle runs — this pins that
+    release() (async unpersists) plus the memo-clear really release the
     last references (a kept reference would float blocks forever)."""
     import gc
     import time

@@ -37,10 +37,12 @@ def test_recommend_sf1_identical_with_evaluators_disabled(spark, monkeypatch):
             json.loads(res.to_json()), sort_keys=True, default=str
         )
 
-    monkeypatch.delenv("SPARK_GRAFT_NO_LOCAL_STEPS", raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_NO_LOCAL_CORET", raising=False)
+    from data_transformation_2022_spark import engine
+    from data_transformation_2022_spark.ml import coret_local
+
     on = payload()
-    monkeypatch.setenv("SPARK_GRAFT_NO_LOCAL_STEPS", "1")
+    monkeypatch.setattr(engine, "eval_steps_local", lambda *a: None)
+    monkeypatch.setattr(coret_local, "eval_coret_local", lambda *a: None)
     off = payload()
     assert on == off
 

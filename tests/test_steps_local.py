@@ -354,8 +354,9 @@ def test_recommend_identical_with_evaluator_disabled(spark, monkeypatch):
 
         return json.dumps(out, sort_keys=True, default=str)
 
-    monkeypatch.delenv("SPARK_GRAFT_NO_LOCAL_STEPS", raising=False)
+    from data_transformation_2022_spark import engine
+
     on = payload()
-    monkeypatch.setenv("SPARK_GRAFT_NO_LOCAL_STEPS", "1")
+    monkeypatch.setattr(engine, "eval_steps_local", lambda *a: None)
     off = payload()
     assert on == off

@@ -20,18 +20,29 @@ Interactive refinement (addT) is replay-from-root on Spark's lazy DAG:
 decoding a node id re-composes the logical plan, which is exactly the
 reference's ``nid2ndata`` re-execution (``search.py:1801-1810``) done by
 Catalyst instead of hand-rolled memo tables.
+
+A session owns ONE ``engine.Executor`` per ingested table: its cached
+sample serves the ingest value dump, every search and every refinement,
+and its frame/bar memo carries over from search to search (the
+reference's ``resdatabuffer``, kept per table rather than per request).
+Re-ingest and ``close()`` release it; a session dropped without
+``close()`` releases it when garbage-collected. Each endpoint holds the
+session's lock, so concurrent requests on one session run one at a time.
 """
 
 from __future__ import annotations
 
+import functools
 import json
+import threading
+import weakref
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .engine import MAX_SERIES, RecommendResult, recommend
+from .engine import MAX_SERIES, Executor, RecommendResult, recommend
 from .operators.steps import RID, Step, apply_tpath, small_input_mode, step_from_dict
 from .profiler import TableProfile, profile_table
 from .sources.readers import read_csv, read_json, read_parquet, with_rid
@@ -77,8 +88,22 @@ def decode_path(nid: str) -> list[dict[str, Any]]:
     return steps
 
 
+def _locked(endpoint):
+    """Run a session endpoint under the session's lock: searches and
+    refinements share one Executor, whose prefetch and release must not
+    interleave (the HTTP server runs each request on its own thread)."""
+
+    @functools.wraps(endpoint)
+    def run(self, *args, **kwargs):
+        with self._lock:
+            return endpoint(self, *args, **kwargs)
+
+    return run
+
+
 class EngineSession:
-    """One ingested table + its profile + interactive refinement state."""
+    """One ingested table + its profile, its Executor (cached sample and
+    frame/bar memo) and interactive refinement state."""
 
     def __init__(self, spark: SparkSession, sample_cap: int = 1000):
         self.spark = spark
@@ -86,15 +111,29 @@ class EngineSession:
         self.df: DataFrame | None = None
         self.profile: TableProfile | None = None
         self.result: RecommendResult | None = None
-        self._sample: DataFrame | None = None
+        self.executor: Executor | None = None
+        self._release = None  # weakref.finalize of the executor's release
+        self._lock = threading.RLock()
+
+    @_locked
+    def close(self) -> None:
+        """Release the table's Spark storage (cached sample and derived
+        bases); the session needs a new ingest before it serves again."""
+        if self._release is not None:
+            self._release()  # runs Executor.release once, then detaches
+        self._release = None
+        self.executor = None
+        self.df = self.profile = self.result = None
 
     # ---- EP1: ingest + profile (reference /vis/csv, main.py:40-73) ----
 
+    @_locked
     def ingest_records(self, headers: list[str], body: list[list]) -> dict[str, Any]:
         pdf = pd.DataFrame(body, columns=pd.Index(headers))
         df = self.spark.createDataFrame(pdf)
         return self._ingest(df)
 
+    @_locked
     def ingest_path(self, path: str, fmt: str | None = None) -> dict[str, Any]:
         fmt = fmt or path.rsplit(".", 1)[-1].lower()
         if fmt == "csv":
@@ -108,10 +147,17 @@ class EngineSession:
         return self._ingest(df)
 
     def _ingest(self, df: DataFrame) -> dict[str, Any]:
+        # the previous table's storage drains on a thread while this one
+        # is profiled; the new Executor joins it before caching its sample
+        self.close()
         self.df = with_rid(df)
         self.profile = profile_table(self.df)
-        self._sample = self.df.orderBy(RID).limit(self.sample_cap).cache()
-        sample_pdf = self._sample.toPandas()
+        self.executor = ex = Executor(self.df, self.sample_cap)
+        # a session dropped without close() still releases its storage:
+        # Spark's CacheManager holds cached plans strongly
+        self._release = weakref.finalize(self, ex.release)
+        self._release.atexit = False
+        sample_pdf, _ = ex._sample_local()
         body = []
         for name, cp in self.profile.columns.items():
             if name == RID:
@@ -145,8 +191,9 @@ class EngineSession:
         "bar": ["sum_bar", "count_bar"],
     }
 
+    @_locked
     def search(self, payload: dict[str, Any] | None = None) -> dict[str, Any]:
-        if self.df is None or self.profile is None:
+        if self.executor is None:
             raise RuntimeError("ingest a table before searching")
         payload = payload or {}
         vl = payload.get("vlist", ["scatter", "line", "bar"])
@@ -165,6 +212,7 @@ class EngineSession:
             dm_ts=payload.get("dm_ts"),
             slist=payload.get("slist"),
             sample_cap=self.sample_cap,
+            executor=self.executor,
         )
         ret = json.loads(self.result.to_json())
         # presentation reorder (reference BEAUTIFYCASEFLAG=True default,
@@ -177,10 +225,12 @@ class EngineSession:
 
     # ---- EP3a: addT (reference /vis/addT, main.py:111-125) ----
 
+    @_locked
     def add_t(self, pid: str, t: str, para: dict[str, Any] | None = None) -> dict[str, Any]:
         """Append one basic transformation to the node ``pid`` and execute
-        the extended path (replay-from-root = Spark lazy DAG)."""
-        if self._sample is None:
+        the extended path (replay-from-root = Spark lazy DAG) on the
+        cached sample."""
+        if self.executor is None:
             raise RuntimeError("ingest a table before refining")
         para = para or {}
         parent_steps = decode_path(pid)
@@ -194,7 +244,7 @@ class EngineSession:
         )
         steps = parent_steps + [step.to_dict()]
         with small_input_mode():  # interactive replay runs on the sample
-            derived = apply_tpath(self._sample, [step_from_dict(s) for s in steps])
+            derived = apply_tpath(self.executor.sample, [step_from_dict(s) for s in steps])
         nid = path_id(steps)
         cols = [c for c in derived.columns if c != RID]
         preview = derived.select(cols).limit(20).toPandas().to_dict(orient="list")
@@ -210,16 +260,18 @@ class EngineSession:
 
     # ---- EP3b: addV (reference /vis/addV, main.py:127-138) ----
 
+    @_locked
     def add_v(self, vtype: str, channels: dict[str, str]) -> dict[str, Any]:
         """Materialize a chart from chosen channel node ids, unscored
-        (reference addvisualization, search.py:1495-1794)."""
-        if self._sample is None:
+        (reference addvisualization, search.py:1495-1794), on the cached
+        sample."""
+        if self.executor is None:
             raise RuntimeError("ingest a table before refining")
         frames: dict[str, pd.DataFrame] = {}
         with small_input_mode():
             for ch, nid in channels.items():
                 steps = [step_from_dict(s) for s in decode_path(nid)]
-                frames[ch] = apply_tpath(self._sample, steps).toPandas()
+                frames[ch] = apply_tpath(self.executor.sample, steps).toPandas()
 
         if vtype in ("num_scatter", "cat_scatter"):
             data = self._join_channels(frames, ["xy", "color"])
@@ -278,10 +330,10 @@ def create_http_server(session: EngineSession, host: str = "127.0.0.1", port: in
     ``shutdown()``. Port 0 binds an ephemeral port (``server_address``
     reports the actual one).
 
-    Spark note: handler threads call into one shared EngineSession; the
-    driver is thread-safe for these calls (the engine's own prefetch
-    pool already multi-threads the session), but this shim is a smoke/
-    integration surface, not a production concurrency story."""
+    Spark note: handler threads call into one shared EngineSession,
+    whose lock runs their requests one at a time (two searches on one
+    Executor would race its release against its prefetch); this shim is
+    a smoke/integration surface, not a production concurrency story."""
     import http.server
 
     routes = {

@@ -5,8 +5,13 @@ The Spark re-architecture of the reference's ``searchobj`` lifecycle
 (search.py EP2, SURVEY §3):
 
   * the *search* runs on metadata (plans.search, no data touched);
-  * each unique transformation path executes ONCE and is memoized
-    (reference resdatabuffer, search.py:293-298);
+  * each unique transformation path executes ONCE per ingested table and
+    is memoized (reference resdatabuffer, search.py:293-298): an
+    ``Executor`` lives as long as its table (``api.EngineSession`` owns
+    one per ingest), so every later search of the session reuses the
+    cached sample and the channel/bar frames earlier searches computed;
+    memo keys are content-addressed, and the memoized frames are
+    read-only because they outlive a request;
   * scatter/line channel frames come from a bounded sample (the
     reference caps all data at 400 rows; we cap only what feeds
     ML/scoring), collected once and evaluated in driver pandas/numpy by
@@ -103,14 +108,35 @@ def _merge_rid(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             # construction preserves dtypes, column order and the
             # RangeIndex the concat+reset_index form produced. The
             # arrays may VIEW the inputs (copy=False) — safe because
-            # memoized channel frames are read-only by contract (every
-            # downstream consumer copies: sort_values, [[...]] slices,
-            # to_numpy).
+            # memoized frames are built over read-only arrays
+            # (_read_only), so a write through the view raises.
             data = {c: left[c].to_numpy() for c in left.columns}
             for c in rcols:
                 data[c] = right[c].to_numpy()
             return pd.DataFrame(data, copy=False)
     return left.merge(right, on=RID)
+
+
+def _read_only(frame: pd.DataFrame | None) -> pd.DataFrame | None:
+    """A copy of ``frame`` over read-only arrays (same columns, dtypes and
+    index). Memoized frames outlive a request and are handed out as views
+    (_merge_rid, bar chart data), so a write through any of them raises
+    instead of corrupting a later search's result. A column with a pandas
+    extension dtype keeps its (writable) array: converting it would
+    change its dtype."""
+    if frame is None:
+        return None
+    data: dict[int, Any] = {}
+    for j in range(frame.shape[1]):
+        s = frame.iloc[:, j]
+        if isinstance(s.dtype, np.dtype):
+            data[j] = a = s.to_numpy(copy=True)
+            a.flags.writeable = False
+        else:
+            data[j] = s.array
+    out = pd.DataFrame(data, index=frame.index, copy=False)
+    out.columns = frame.columns
+    return out
 
 
 @dataclass
@@ -158,22 +184,38 @@ class RecommendResult:
 
 # release() threads still draining their unpersists. Spark's CacheManager
 # uncaches by ANALYZED-PLAN equality, so a delayed async unpersist from a
-# previous executor over the same df can evict a NEW executor's freshly
-# persisted (plan-identical) sample or derived base mid-prefetch — perf-only
-# (blocks recompute), but exactly the back-to-back-recommend() case the async
-# release was meant to speed up (ADVICE r12). New executors join these first.
+# previous search or executor over the same df can evict a freshly persisted
+# (plan-identical) sample or derived base mid-prefetch — perf-only (blocks
+# recompute), but exactly the back-to-back-search case the async release was
+# meant to speed up (ADVICE r12). Executor construction (which caches the
+# sample) and every prefetch (which persists derived bases) join these first.
 _PENDING_RELEASES: list = []
 
 
+def _join_pending_releases() -> None:
+    while _PENDING_RELEASES:
+        try:
+            _PENDING_RELEASES.pop().join(timeout=60)
+        except IndexError:
+            pass  # emptied by a concurrent joiner
+
+
 class Executor:
-    """Memoized pipeline executor (reference resdatabuffer)."""
+    """Memoized pipeline executor (reference resdatabuffer) for ONE table.
+
+    It lives as long as the table does: ``api.EngineSession`` builds one
+    per ingest and passes it to every search, so the cached sample and
+    the channel/bar frame memos carry over from search to search. The
+    memo keys are content-addressed — ``(Candidate.signature(), coret)``
+    and ``(x, y-signature, agg)`` — and for a fixed table and
+    ``sample_cap`` each entry is a pure function of the data; cluster
+    edits, ``dm_ts`` and ``slist`` only change which entries a search
+    asks for and how it scores them. Memoized frames are read-only.
+    ``recommend()`` without an executor builds and fully releases its
+    own, as a one-shot call."""
 
     def __init__(self, df: DataFrame, sample_cap: int):
-        while _PENDING_RELEASES:
-            try:
-                _PENDING_RELEASES.pop().join(timeout=60)
-            except Exception:
-                pass
+        _join_pending_releases()
         if RID not in df.columns:
             df = with_rid(df)
         self.df = df
@@ -260,7 +302,7 @@ class Executor:
                             out = sdf.orderBy(RID).toPandas()
                 except Exception:
                     out = None
-        self._frames[key] = out
+        self._frames[key] = out = _read_only(out)
         return out
 
     def bar_aggregate(
@@ -294,7 +336,7 @@ class Executor:
                 out = base.groupBy(x_col).agg(*aggs).toPandas()
         except Exception:
             out = None
-        self._bar_frames[key] = out
+        self._bar_frames[key] = out = _read_only(out)
         return out
 
     def prefetch(
@@ -325,13 +367,22 @@ class Executor:
         4.5 s at sf0.1)."""
         from concurrent.futures import ThreadPoolExecutor
 
+        # a previous search's async release must not evict the bases this
+        # one is about to persist (plan-identical ones included)
+        _join_pending_releases()
+        # jobs an earlier search of this table already memoized are
+        # dropped BEFORE grouping: they must not materialize bases or
+        # overwrite their memo entries
         uniq_frames: dict[tuple, tuple[Candidate, str | None]] = {}
         for cand, coret in frame_jobs:
-            uniq_frames[(cand.signature(), coret)] = (cand, coret)
+            key = (cand.signature(), coret)
+            if key not in self._frames:
+                uniq_frames[key] = (cand, coret)
         uniq_bars: dict[tuple, tuple[str, Candidate | None, str]] = {}
         for x_col, y_cand, agg in bar_jobs:
             key = (x_col, y_cand.signature() if y_cand is not None else None, agg)
-            uniq_bars[key] = (x_col, y_cand, agg)
+            if key not in self._bar_frames:
+                uniq_bars[key] = (x_col, y_cand, agg)
 
         # group bar jobs by derived base; within a base, by x column —
         # one GROUPING SETS job per base covers every x
@@ -452,7 +503,7 @@ class Executor:
                                 pass
                         frames[x] = fr
                 for key, x_col, names in per_entry:
-                    self._bar_frames[key] = frames[x_col][[x_col] + names].copy()
+                    self._bar_frames[key] = _read_only(frames[x_col][[x_col] + names])
             except Exception:
                 # isolate failures: replay each entry through the
                 # original one-agg path so a single bad candidate can't
@@ -592,45 +643,47 @@ class Executor:
             for f in [sides.submit(_sample_side), sides.submit(_table_side)]:
                 f.result()
 
-    def release(self) -> None:
-        """Unpersist everything this executor cached (sample + derived
-        bases). The memo tables hold collected pandas frames and stay
-        valid; only the Spark-side storage is dropped.
+    def release(self, sample: bool = True) -> None:
+        """Unpersist this executor's Spark-side storage: the derived
+        bases, and with ``sample`` (the default) the cached sample too.
+        The memo tables hold collected pandas frames and stay valid.
+
+        Two uses: after each search of a session, ``sample=False`` drops
+        only the derived bases (a later search needs them only for bar
+        aggregates it has not memoized yet, and rebuilds those); on
+        re-ingest, close, or the end of a one-shot ``recommend()``, the
+        default drops everything.
 
         The Spark-side calls run on a daemon thread: every result the
         caller sees is already driver-side pandas by this point, and
         the ~40 py4j round-trips (each ``.rdd`` conversion + unpersist
         is a blocking socket exchange) measured ~1.1 s of pure
-        response-latency tail at sf0.1. The memo tables are detached
+        response-latency tail at sf0.1. The base memo is detached
         SYNCHRONOUSLY (captured into the closure, then cleared), so a
-        subsequent recommend() on this executor can never race the
-        cleanup — it starts from empty memos and fresh persists. The
-        SPARK-side cache is a different story: CacheManager uncaches by
-        analyzed-plan equality, so the drop thread is registered in
-        _PENDING_RELEASES and the next Executor joins it before
-        persisting anything plan-identical (ADVICE r12)."""
+        later search on this executor can never race the cleanup — it
+        derives and persists fresh bases. The SPARK-side cache is a
+        different story: CacheManager uncaches by analyzed-plan
+        equality, so the drop thread is registered in _PENDING_RELEASES,
+        and Executor construction and prefetch join it before persisting
+        anything plan-identical (ADVICE r12)."""
         import threading
 
-        sample = self.sample
-        derived = list(self._derived_bases.values())
+        dropped = [self.sample] if sample else []
+        dropped += self._derived_bases.values()
         self._derived_bases.clear()
         self._persisted_base_keys.clear()
         self._pruned_base_keys.clear()
 
         def _drop() -> None:
-            try:
-                sample.unpersist()
-            except Exception:
-                pass
-            for base in derived:
+            for base in dropped:
                 try:
                     base.unpersist()
                 except Exception:
                     pass
 
         th = threading.Thread(target=_drop, daemon=True, name="executor-release")
-        _PENDING_RELEASES.append(th)
         th.start()
+        _PENDING_RELEASES.append(th)
 
     def _derived_base(
         self,
@@ -860,11 +913,18 @@ def recommend(
     slist: dict[str, bool] | None = None,
     max_channel_candidates: int = 12,
     max_depth: int = 2,
+    executor: Executor | None = None,
 ) -> RecommendResult:
     """Run the full recommendation pipeline and return ranked charts +
     provenance. ``max_depth`` defaults lower than the reference's 5:
     Pareto-surviving depth>2 chains add cost quadratically and the
-    reference itself prunes most of them."""
+    reference itself prunes most of them.
+
+    ``executor``: the table's long-lived Executor (built over ``df``
+    with ``sample_cap``, e.g. by ``api.EngineSession``). Frames it
+    memoized in earlier calls are reused, and only its derived bases are
+    released at the end; without one, a fresh Executor is built and
+    fully released (``sample_cap`` then sizes its sample)."""
     chart_types = chart_types or list(VLIST)
     dm_ts = dm_ts or ["pca", "kmeans", "mds", "dbscan"]
     slist = {**SLIST_DEFAULT, **(slist or {})}
@@ -872,7 +932,7 @@ def recommend(
     if profile is None:
         profile = profile_table(df)
     pools = enumerate_tpaths(profile, max_depth=max_depth)
-    ex = Executor(df, sample_cap)
+    ex = executor if executor is not None else Executor(df, sample_cap)
 
     # channel candidate lists: (t-name, Candidate, coret-or-None)
     def num2() -> list[tuple[str, Candidate, str | None]]:
@@ -1135,7 +1195,7 @@ def recommend(
                         {"x": ch_info(xt, xc, [xcol]), "y": ch_info(yt, yc, ys)},
                         sc,
                         float(np.mean(list(sc.values()))) if sc else 0.0,
-                        agg,
+                        agg.copy(deep=False),
                     )
                 )
 
@@ -1154,16 +1214,16 @@ def recommend(
                     {"x": ch_info(xt, xc, [xcol])},
                     sc,
                     float(np.mean(list(sc.values()))) if sc else 0.0,
-                    agg,
+                    agg.copy(deep=False),
                 )
             )
 
     ranked = _rank_dedup(charts)
     # every downstream artifact is driver-side pandas by now: release the
-    # executor's cached sample and derived bases so repeated recommend()
-    # calls (a serving process, the bench suite) don't accumulate
-    # persisted RDDs and GC pressure
-    ex.release()
+    # derived bases (and a one-shot executor's sample) so repeated
+    # recommend() calls (a serving process, the bench suite) don't
+    # accumulate persisted RDDs and GC pressure
+    ex.release(sample=executor is None)
     return RecommendResult(ranked, profile, _provenance(ranked))
 
 

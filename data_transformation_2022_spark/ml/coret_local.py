@@ -26,13 +26,18 @@ Strict equivalence contract (same shape as operators/steps_local.py):
   provably fails from the tracked schema: the Spark runner would
   return None, so the caller skips it.
 * ``pca``'s exact path folds moment sums in DECIMAL(38,30). Spark's
-  double→decimal cast routes through Java's shortest-round-trip
-  ``Double.toString``; the local twin mirrors it with
-  ``Decimal(repr(x)).quantize(1e-30, HALF_UP)`` — verified against the
-  live cast over 16M values of the relevant classes (uniform, products,
-  scaled ints, tiny magnitudes) with zero mismatches on this JVM, and
-  pinned by tests/test_coret_local.py byte-equality against the LIVE
-  Spark path (so a JVM whose Double.toString diverges from Python repr
+  double→decimal cast routes through Java's ``Double.toString``; the
+  local twin mirrors it with ``Decimal(repr(x)).quantize(1e-30,
+  HALF_UP)``, except for exact powers of two on a JVM older than 19:
+  there ``Double.toString`` is the shortest decimal within half the gap
+  BELOW the value (the narrower side), not repr's shortest round-trip
+  string (2**-24 prints ``5.9604644775390625E-8``, repr
+  ``5.960464477539063e-08``). One probe of the live JVM per process
+  picks the rule. Verified against the live cast over 16M values of the
+  relevant classes (uniform, products, scaled ints, tiny magnitudes)
+  plus every power of two, its ×3 multiple, subnormals and near-halfway
+  values, and pinned by tests/test_coret_local.py byte-equality against
+  the LIVE Spark path (so a JVM whose Double.toString diverges again
   fails tests instead of drifting silently).
 * Structural fallbacks: nulls/NaN anywhere in the consumed columns for
   pca/kmeans (Spark aggregates skip nulls and order NaN last — not
@@ -46,7 +51,9 @@ Strict equivalence contract (same shape as operators/steps_local.py):
 
 from __future__ import annotations
 
+import math
 from decimal import ROUND_HALF_UP, Decimal, localcontext
+from fractions import Fraction
 
 import numpy as np
 import pandas as pd
@@ -76,15 +83,57 @@ def _numeric_cols(types: list[tuple[str, str]]) -> list[str]:
     return [c for c, t in types if _base(t) in _NUMERIC_SPARK_TYPES and c != RID]
 
 
+def _pow2_lower_gap(x: float) -> Decimal:
+    """The shortest decimal within half the gap below ``x`` = ±2**k (the
+    nearest one at that length): a JDK < 19 ``Double.toString`` of a
+    normal power of two. Seventeen digits always suffice."""
+    v = Fraction(abs(x))
+    half_gap = v / 2**54  # the gap below 2**k is 2**(k-53)
+    top = Decimal(abs(x)).adjusted()
+    for nd in range(1, 18):
+        q = Fraction(10) ** (top - nd + 1)
+        n = round(v / q)
+        if abs(n * q - v) <= half_gap or nd == 17:
+            return Decimal(n).scaleb(top - nd + 1).copy_sign(Decimal(x))
+
+
+# does the JVM print powers of two by the lower-gap rule? None = not
+# probed yet (probed once per process, on the first power of two cast
+# while a SparkContext is up)
+_JVM_POW2_LOWER_GAP: bool | None = None
+
+
+def _jvm_pow2_lower_gap() -> bool:
+    global _JVM_POW2_LOWER_GAP
+    if _JVM_POW2_LOWER_GAP is None:
+        from pyspark import SparkContext
+
+        sc = SparkContext._active_spark_context
+        if sc is None:
+            return False  # no JVM to ask: repr, and ask again next time
+        probe = 2.0**-24
+        printed = Decimal(sc._jvm.java.lang.Double.toString(probe))
+        _JVM_POW2_LOWER_GAP = printed == _pow2_lower_gap(probe)
+    return _JVM_POW2_LOWER_GAP
+
+
 def _dec_cast(x: float) -> Decimal:
-    """Spark's CAST(double AS DECIMAL(38,30)): shortest-round-trip
-    decimal string (BigDecimal.valueOf == Double.toString == repr,
-    empirically verified on this JVM; CI-pinned), HALF_UP at scale 30.
-    Owns its precision context: a quantize to scale 30 can carry up to
-    38 digits, past the default context's 28."""
+    """Spark's CAST(double AS DECIMAL(38,30)): the decimal string of
+    ``Double.toString`` — repr's shortest round-trip string, except for
+    a power of two 2**k (-1022 < k < 53) on a JVM that prints those by
+    the lower-gap rule (below 2**-1021 the cast quantizes to zero, from
+    2**53 on it overflows) — HALF_UP at scale 30. Owns its precision
+    context: a quantize to scale 30 can carry up to 38 digits, past the
+    default context's 28."""
+    x = float(x)
+    m, e = math.frexp(x)
+    if abs(m) == 0.5 and -1021 < e <= 53 and _jvm_pow2_lower_gap():
+        d = _pow2_lower_gap(x)
+    else:
+        d = Decimal(repr(x))
     with localcontext() as ctx:
         ctx.prec = 50
-        return Decimal(repr(x)).quantize(_DEC_Q, rounding=ROUND_HALF_UP)
+        return d.quantize(_DEC_Q, rounding=ROUND_HALF_UP)
 
 
 def eval_coret_local(

@@ -196,3 +196,297 @@ def test_http_server_all_four_routes(spark):
     finally:
         server.shutdown()
         server.server_close()
+
+
+# ---------------------------------------------------------------------------
+# one Executor per ingested table: the session's sample and frame/bar memo
+# carry over from search to search
+# ---------------------------------------------------------------------------
+
+
+def _sheet(rows: int = 300) -> tuple[list[str], list[list]]:
+    """A spreadsheet-shaped table: ordinal year, two nominals, and three
+    numeric name families, so the profile finds several dimension
+    clusters for an analyst to edit."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    i = np.arange(rows)
+    cols: dict[str, list] = {
+        "Year": (1980 + i // 4).tolist(),
+        "Region": [("North", "South", "East", "West")[j] for j in i % 4],
+        "Tier": [("A", "B")[j] for j in (i // 5) % 2],
+    }
+    for fam, scale in (("Temp", 1.0), ("Sales", 100.0), ("Rain", 10.0)):
+        lat = rng.normal(size=rows)
+        for k in range(3):
+            v = scale * (lat * rng.uniform(0.9, 1.1) + rng.normal(scale=0.1, size=rows))
+            cols[f"{fam}_{k}"] = np.round(v, 3).tolist()
+    headers = list(cols)
+    return headers, [list(r) for r in zip(*(cols[h] for h in headers))]
+
+
+def _payload(ret: dict) -> str:
+    from data_transformation_2022_spark.api import _json_default
+
+    return json.dumps(ret, sort_keys=True, default=_json_default)
+
+
+def _assert_same_charts(got: list, want: list) -> None:
+    import pandas as pd
+
+    assert len(got) == len(want) > 0
+    for a, b in zip(got, want):
+        pd.testing.assert_frame_equal(a, b, check_exact=True, check_dtype=True)
+
+
+def _fresh(spark, ingest, payload: dict) -> tuple[str, list]:
+    """What a fresh session returns for one request."""
+    s = EngineSession(spark)
+    ingest(s)
+    try:
+        ret = _payload(s.search(dict(payload)))
+        return ret, [c.data for c in s.result.charts]
+    finally:
+        s.close()
+
+
+def _spark_jobs(spark, fn):
+    """(fn(), ids of the Spark jobs it submitted). The job group marks
+    this thread's jobs; the prefetch pools' threads do not inherit it, so
+    new jobs without a group are counted too."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    group = "test-api-session-jobs"
+    before = set(st.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "session search")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, set(st.getJobIdsForGroup(group)) | (set(st.getJobIdsForGroup(None)) - before)
+
+
+def _is_cached(df) -> bool:
+    return df.storageLevel.useMemory or df.storageLevel.useDisk
+
+
+def test_session_sample_stays_cached(spark):
+    """A search must not evict the session's cached sample: the sample
+    stays cached (one object, never recomputed from the source) through
+    search -> add_t -> add_v -> re-search."""
+    headers, body = _sheet()
+    s = EngineSession(spark, sample_cap=200)
+    s.ingest_records(headers, body)
+    sample = s.executor.sample
+    assert _is_cached(sample)
+    try:
+        s.search({})
+        assert s.executor.sample is sample and _is_cached(sample)
+        s.add_t("root", "rank", {"i_type": "==", "i": ["Temp_0"], "o_type": "append"})
+        assert _is_cached(sample)
+        x_id = path_id(
+            [{"t": "select", "i_type": "==", "i": ["Region"], "o_type": "new_table",
+              "index": [], "args": []}]
+        )
+        s.add_v("count_bar", {"x": x_id})
+        assert _is_cached(sample)
+        s.search({"vlist": ["bar"]})
+        assert s.executor.sample is sample and _is_cached(sample)
+    finally:
+        s.close()
+
+
+def test_session_equivalence_lineitem(spark, sf_dir):
+    """The analyst flow on sf0.001 lineitem: every search of one session
+    returns the payload and chart data a fresh session returns for the
+    same request, and a repeated search submits no Spark job."""
+    path = f"{sf_dir}/lineitem.parquet"
+    flow = [
+        {},
+        {"vlist": ["bar"]},
+        {"vlist": ["scatter"], "dm_ts": ["pca", "kmeans"]},
+        {},
+    ]
+    s = EngineSession(spark)
+    s.ingest_path(path)
+    try:
+        got = []
+        for i, payload in enumerate(flow):
+            ret, jobs = _spark_jobs(spark, lambda p=payload: s.search(dict(p)))
+            got.append((_payload(ret), [c.data for c in s.result.charts]))
+            if i == 0:
+                assert jobs, "the first search must run Spark jobs (counter check)"
+            if i == len(flow) - 1:
+                assert jobs == set(), f"repeated search submitted Spark jobs {sorted(jobs)}"
+    finally:
+        s.close()
+    assert got[0][0] == got[-1][0]
+    for (payload, data), request in zip(got, flow):
+        want, want_data = _fresh(spark, lambda f: f.ingest_path(path), request)
+        assert payload == want, f"search {request} differs from a fresh session's"
+        _assert_same_charts(data, want_data)
+
+
+def test_session_equivalence_cluster_edit(spark):
+    """A spreadsheet-shaped table: search, then a re-search after the
+    analyst drops one dimension cluster; both equal a fresh session's
+    answers, and a repeated search submits no Spark job."""
+    headers, body = _sheet()
+    s = EngineSession(spark)
+    clusters = s.ingest_records(headers, body)["dim_clusters"]
+    assert len(clusters) > 1, "the table must offer a cluster edit"
+    edit = {"dim_clusters": [list(c) for c in clusters[1:]]}
+    try:
+        first = (_payload(s.search({})), [c.data for c in s.result.charts])
+        edited = (_payload(s.search(dict(edit))), [c.data for c in s.result.charts])
+        ret, jobs = _spark_jobs(spark, lambda: s.search(dict(edit)))
+        assert _payload(ret) == edited[0]
+        assert jobs == set(), f"repeated search submitted Spark jobs {sorted(jobs)}"
+    finally:
+        s.close()
+    assert first[0] != edited[0], "the cluster edit must change the search"
+    for (payload, data), request in ((first, {}), (edited, edit)):
+        want, want_data = _fresh(spark, lambda f: f.ingest_records(headers, body), request)
+        assert payload == want, f"search {request} differs from a fresh session's"
+        _assert_same_charts(data, want_data)
+
+
+def test_memo_frames_read_only(spark):
+    """Memoized frames outlive a search and chart data views them:
+    writing into a chart's data raises (bar data is the memo itself, only
+    re-wrapped), and whatever a caller writes into one search's charts,
+    the next search's payload and data are unchanged."""
+    headers, body = _sheet()
+    s = EngineSession(spark, sample_cap=200)
+    s.ingest_records(headers, body)
+    try:
+        first = _payload(s.search({}))
+        charts = s.result.charts
+        kept = [c.data.copy() for c in charts]
+        bars = [c for c in charts if c.chart_type in ("sum_bar", "count_bar")]
+        assert bars, "the table must yield bar charts"
+        for c in bars:
+            with pytest.raises(ValueError, match="read-only"):
+                c.data.iloc[0, 1] = 0
+            c.data["extra"] = 1  # a new column stays on this chart's frame
+        for c in charts:  # any other chart: a write raises or hits a copy
+            try:
+                c.data.iloc[0, 0] = c.data.iloc[1, 0]
+            except ValueError:
+                pass
+        assert _payload(s.search({})) == first
+        _assert_same_charts([c.data for c in s.result.charts], kept)
+    finally:
+        s.close()
+
+
+def _cached_rdds(spark) -> int:
+    return sum(
+        1
+        for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()
+        if info.numCachedPartitions() > 0
+    )
+
+
+def _storage_back_to(spark, base: int) -> bool:
+    """Join pending releases, then GC until Spark storage is back to
+    ``base`` cached RDDs (60 s at most)."""
+    import gc
+    import time
+
+    import data_transformation_2022_spark.engine as eng
+
+    deadline = time.time() + 60
+    while time.time() < deadline:
+        gc.collect()
+        while eng._PENDING_RELEASES:
+            eng._PENDING_RELEASES.pop().join(timeout=60)
+        spark.sparkContext._jvm.System.gc()
+        if _cached_rdds(spark) <= base:
+            return True
+        time.sleep(1.0)
+    return False
+
+
+@pytest.mark.parametrize("end", ["close", "drop", "reingest"])
+def test_session_storage_released(spark, end):
+    """Spark storage returns to its baseline when a session is closed,
+    when it is dropped without close() (weakref finalizer), and when it
+    re-ingests (the previous table's executor is released)."""
+    headers, body = _sheet()
+    base = _cached_rdds(spark)
+    s = EngineSession(spark, sample_cap=200)
+    s.ingest_records(headers, body)
+    s.search({"vlist": ["bar", "scatter"], "dm_ts": ["pca"]})
+    assert _cached_rdds(spark) > base
+    if end == "close":
+        s.close()
+        assert s.executor is None
+    elif end == "drop":
+        del s
+    else:  # only the new table's sample stays cached, until close()
+        s.ingest_records(headers[:5], [r[:5] for r in body])
+        assert _storage_back_to(spark, base + 1), "re-ingest kept the old table's storage"
+        s.close()
+    assert _storage_back_to(spark, base), (
+        f"session kept cached RDDs: {_cached_rdds(spark)} > baseline {base}"
+    )
+
+
+def test_concurrent_searches_on_one_session(spark, monkeypatch):
+    """Two threads searching one session (as the HTTP server's threads
+    do) both get the payload a sequential search returns, and the
+    session runs them one at a time (each search is held open long
+    enough for an unlocked pair to overlap)."""
+    import threading
+    import time
+
+    from data_transformation_2022_spark import api
+
+    headers, body = _sheet()
+    s = EngineSession(spark)
+    s.ingest_records(headers, body)
+    try:
+        want = {
+            "all": _fresh(spark, lambda f: f.ingest_records(headers, body), {})[0],
+            "bar": _fresh(spark, lambda f: f.ingest_records(headers, body), {"vlist": ["bar"]})[0],
+        }
+        running, peak, count = [0], [0], threading.Lock()
+        recommend = api.recommend
+
+        def held(*args, **kwargs):
+            with count:
+                running[0] += 1
+                peak[0] = max(peak[0], running[0])
+            try:
+                time.sleep(0.3)
+                return recommend(*args, **kwargs)
+            finally:
+                with count:
+                    running[0] -= 1
+
+        monkeypatch.setattr(api, "recommend", held)
+        got: dict[str, str] = {}
+        errors: list[BaseException] = []
+
+        def run(name: str, payload: dict) -> None:
+            try:
+                got[name] = _payload(s.search(payload))
+            except BaseException as e:  # surfaced by the assert below
+                errors.append(e)
+
+        threads = [
+            threading.Thread(target=run, args=("all", {})),
+            threading.Thread(target=run, args=("bar", {"vlist": ["bar"]})),
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads), "a search did not finish"
+        assert not errors, errors
+        assert got == want
+        assert peak[0] == 1, "two searches ran on one executor at once"
+    finally:
+        s.close()

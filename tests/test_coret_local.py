@@ -194,6 +194,35 @@ def test_decimal_cast_matches_live_spark(spark):
         for v, d in zip(pdf[c].to_numpy(), pdf[dc]):
             assert _dec_cast(float(v)) == d, f"cast drift at {v!r}"
 
+    # adversarial classes a uniform sweep rarely hits: every power of two
+    # the cast can hold (JDK < 19 prints these by a different rule than
+    # repr) and its x3 multiple, both signs; subnormals; and the doubles
+    # nearest to (and one ulp either side of) halfway points — of the
+    # 1e-30 quantum (magnitudes 1e-30..1e-15) and of a 17-digit decimal
+    # (magnitudes 1e-15..1)
+    import math
+    from decimal import Decimal
+
+    rs = np.random.RandomState(13)
+    vals = [math.ldexp(1.0, e) for e in range(-1074, 27)]
+    vals += [3.0 * v for v in vals if 3.0 * v < 1e8]
+    vals += [-v for v in vals]
+    vals += [math.ldexp(float(m), -1074) for m in (1, 2, 3, 5, 2**20 + 1, 2**52 - 1)]
+    vals += list(rs.rand(200) * 2.2250738585072014e-308)
+    for _ in range(300):
+        n = int(rs.randint(1, 10**15))
+        m = int(rs.randint(10**8, 10**9)) * 10**8 + int(rs.randint(0, 10**8))
+        for h in (
+            float(Decimal(10 * n + 5).scaleb(-31)),
+            float(Decimal(10 * m + 5).scaleb(-18 - int(rs.randint(0, 15)))),
+        ):
+            vals += [math.nextafter(h, 0.0), h, math.nextafter(h, 1.0)]
+    adv = spark.createDataFrame([(float(v),) for v in vals], "v double")
+    got = adv.select("v", F.col("v").cast("decimal(38,30)").alias("d")).collect()
+    assert len(got) == len(vals) > 6000
+    bad = [(r.v, r.d) for r in got if _dec_cast(r.v) != r.d]
+    assert not bad, f"cast drift at {len(bad)} adversarial values, e.g. {bad[:3]}"
+
 
 def test_bench_pool_serve_rate(spark, sf_dir):
     """Rot-guard: the core-T-eligible dm candidates of the bench table —
@@ -300,7 +329,7 @@ def test_recommend_identical_with_evaluators_refusing(spark, sf_dir, monkeypatch
             payload = {}
         out = json.dumps(s.search(payload), sort_keys=True, default=_json_default)
         data = [c.data for c in s.result.charts]
-        s._sample.unpersist()
+        s.close()
         return out, data
 
     on, on_data = search()

@@ -445,6 +445,26 @@ def test_release_joined_before_next_executor(spark):
         eng._PENDING_RELEASES.pop().join(timeout=60)
 
 
+def test_release_joined_before_next_prefetch(spark):
+    """Same-executor variant: a session's executor outlives a search, and
+    the search's async release of its derived bases must be joined before
+    the next prefetch on that executor persists anything (a plan-identical
+    base would otherwise be evicted mid-prefetch)."""
+    import data_transformation_2022_spark.engine as eng
+
+    df = spark.createDataFrame(
+        [(float(i), f"g{i % 2}") for i in range(20)], "a double, g string"
+    )
+    ex = eng.Executor(df, sample_cap=10)
+    ex.release(sample=False)
+    assert len(eng._PENDING_RELEASES) == 1
+    pending = eng._PENDING_RELEASES[0]
+    ex.prefetch([], [])
+    assert eng._PENDING_RELEASES == [] and not pending.is_alive()
+    ex.release()
+    while eng._PENDING_RELEASES:
+        eng._PENDING_RELEASES.pop().join(timeout=60)
+
 def test_release_reclaims_spark_storage(spark):
     """A serving loop must return the Spark-side storage to its pre-loop
     level once references drop and a GC cycle runs — this pins that
